@@ -49,17 +49,12 @@ def register_plan_cache(cache: MutableMapping) -> MutableMapping:
 
 
 def _unpersist_value(val) -> None:
-    """Unpersist every DataFrame reachable from a cache value (values
-    may be bare frames or tuples/lists of them, e.g. the BPE learn
-    cache's ``(merge_frames, state)``)."""
+    """Unpersist a cache value if it is a DataFrame."""
     if isinstance(val, DataFrame):
         try:
             val.unpersist()
         except Exception:
             pass
-    elif isinstance(val, (tuple, list)):
-        for v in val:
-            _unpersist_value(v)
 
 
 def clear_plan_caches() -> None:

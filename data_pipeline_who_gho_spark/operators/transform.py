@@ -26,7 +26,6 @@ from collections.abc import Iterable, Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache
 from ..schemas import OBSERVATION_KEY_COLUMNS, RAW_OBSERVATION
 
 OBSERVATION_REQUIRED_COLUMNS = [f.name for f in RAW_OBSERVATION.fields][1:]  # sans Id
@@ -95,36 +94,9 @@ def dedup_keep_first(
     )
 
 
-# clean_observations runs once per pipeline stage but many times across a
-# bench/correctness session over the same input plan — the Id-usability
-# probe is a Spark job, so its verdict is memoized per (application, plan).
-_ID_PROBE_CACHE: dict[tuple[str, int], bool] = register_plan_cache({})
-_ID_PROBE_CACHE_MAX = 64
-
-
 def _id_usable(df: DataFrame) -> bool:
-    """Existence probe for a non-null Id, memoized on the analyzed-plan
-    semantic hash PLUS the input-file snapshot (driver-side; no job when
-    the same input recurs). semanticHash alone hashes the plan, not the
-    data — a rewrite at the same path keeps the hash, but Spark writes
-    fresh uuid part-file names, so inputFiles() changes and invalidates
-    the memo."""
-    try:
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            df.semanticHash(),
-            hash(tuple(sorted(df.inputFiles()))),
-        )
-    except Exception:  # pragma: no cover - semanticHash unavailable
-        key = None
-    if key is not None and key in _ID_PROBE_CACHE:
-        return _ID_PROBE_CACHE[key]
-    usable = df.where(F.col("Id").isNotNull()).limit(1).count() > 0
-    if key is not None:
-        if len(_ID_PROBE_CACHE) >= _ID_PROBE_CACHE_MAX:
-            _ID_PROBE_CACHE.clear()
-        _ID_PROBE_CACHE[key] = usable
-    return usable
+    """Existence probe for a non-null Id (one small Spark job)."""
+    return df.where(F.col("Id").isNotNull()).limit(1).count() > 0
 
 
 def clean_observations(df: DataFrame) -> DataFrame:
@@ -149,8 +121,7 @@ def clean_observations(df: DataFrame) -> DataFrame:
     # Reference branch: dedup on Id when the column has any non-null value,
     # else composite key (etl/transform.py:45-48). The branch condition is
     # driver-side plan construction. An injected Id is all-null by
-    # construction (schema-derived — no probe job); a real Id column is
-    # probed once per distinct input plan, then served from cache.
+    # construction (schema-derived — no probe job); a real Id is probed.
     id_usable = had_id and _id_usable(df)
     keys = ["Id"] if id_usable else OBSERVATION_KEY_COLUMNS
     # pandas keeps first-in-input-order; input order is unobservable across

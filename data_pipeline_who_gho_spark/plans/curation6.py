@@ -23,7 +23,7 @@ flags, cross-source contamination, and tokenizer fertility.
 * ``tokenizer_fertility``: the per-source tokenizer-efficiency rollup
   a tokenizer-training loop reports — words, BPE tokens, fertility
   (tokens/word), and chars/token under the learned merge table
-  (plans/tokenizer._learn). Merge application stays on the
+  (plans/tokenizer._bpe_state). Merge application stays on the
   vocab-bounded symbol table; the corpus-scale stage is one broadcast
   join + one source-grain aggregate.
 
@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from ..functions import text as TX
 from ..sources.catalog import load_table, spread_by_hash
 from .extensions import _sql_tokens
-from .tokenizer import BPE_STEPS, _bpe_blocks, _learn
+from .tokenizer import BPE_STEPS, _bpe_blocks, _bpe_state
 
 # ---------------------------------------------------------------------------
 # Gopher-style repetition flags
@@ -316,7 +316,7 @@ def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     token. word → (n_bpe, n_chars) is a property of the vocab-bounded
     symbol table; the corpus-scale stage is one broadcast join + one
     source-grain partial aggregate."""
-    _, state = _learn(spark, sf_dir)
+    state = _bpe_state(spark, sf_dir)
     word_stats = state.groupBy("word").agg(
         F.count(F.lit(1)).alias("n_bpe"),
         F.sum(F.length("sym")).alias("n_chars"),

@@ -1,31 +1,31 @@
-"""Tokenizer-training operators: BPE merge learning on Spark.
+"""Tokenizer-training operators: BPE merge learning on the driver.
 
 ``bpe_learn_merges`` runs the first K iterations of byte-pair-encoding
 vocabulary learning (Sennrich et al., 2016) — the tokenizer-training
-step of an LLM data pipeline — as a pure DataFrame plan:
+step of an LLM data pipeline — in two steps:
 
-1. ONE corpus-scale shuffle builds the word-frequency table (map-side
-   combined groupBy — the same plan as ``vocab_top_tokens``). This is
-   the only stage that touches corpus-sized data; everything after
-   operates on the compact (vocab-bounded) symbol table, which is the
-   actual architecture of BPE trainers at 100 TB: you never re-scan the
+1. ONE Spark aggregation builds the corpus word-frequency table (the
+   same plan as ``vocab_top_tokens``) and collects it. This is the only
+   stage that touches corpus-sized data; BPE trainers never re-scan the
    corpus per merge.
-2. Each word becomes (word, freq, pos, sym) single-character symbol
-   rows; per iteration the plan counts adjacent symbol pairs weighted
-   by word frequency, picks the arg-max pair (ties by pair
-   lexicographic order — deterministic), and applies the merge with
-   LEFT-TO-RIGHT greedy non-overlapping semantics.
+2. ``learn_bpe`` runs the K greedy merges over that table on the
+   driver. Per step it counts adjacent symbol pairs weighted by word
+   frequency, picks the arg-max pair (ties by ``(left, right)`` in
+   code-point order, which is the UTF-8 byte order Spark and DuckDB
+   sort strings by) and merges it LEFT-TO-RIGHT without overlap
+   (merging ('a','a') in "aaaa" gives "aa","aa"). It stops early, and
+   keeps the state, when no adjacent pair is left.
 
-The greedy overlap rule (e.g. merging ('a','a') in "aaaa" produces
-"aa","aa", not three overlapping pairs) is implemented without any
-sequential fold: pair-start rows that overlap are by construction
-CONSECUTIVE row numbers within a word (a chain requires sym[p+1] to
-start a pair too), so islands of consecutive starts (rn − row_number)
-with even in-island offset are exactly the greedily selected merges.
-Window state never leaves the word partition.
+The other operators apply the final symbol state — one DataFrame
+``(word, freq, pos, sym)``, built by one ``createDataFrame`` — to the
+corpus with a broadcast join; document text is never re-processed per
+merge.
+
+Size limit: the state has Σ len(word) rows over the vocabulary. It
+must fit in driver memory and in one ``createDataFrame``.
 
 The DuckDB oracle unrolls the same K iterations as CTE blocks from the
-same constants — both engines execute the identical algorithm text.
+same constants, as an independent SQL reference.
 
 Output: one row per learned merge (step, left, right, merged,
 pair_freq) — the merge table a BPE tokenizer ships with.
@@ -33,21 +33,54 @@ pair_freq) — the merge table a BPE tokenizer ships with.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..caching import register_plan_cache
 from ..functions import text as TX
 from ..sources.catalog import load_table
 
 BPE_STEPS = 6
 
-_CHARS_EXPR = "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
+_MERGES_SCHEMA = (
+    "step int, `left` string, `right` string, merged string, pair_freq long"
+)
+_STATE_SCHEMA = "word string, freq long, pos int, sym string"
 
 
-def _word_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(word, freq, pos, sym): corpus word frequencies exploded to
-    single-character symbol rows (the BPE initial state)."""
+def learn_bpe(
+    word_freq: dict[str, int], steps: int
+) -> tuple[list[tuple[int, str, str, str, int]], dict[str, list[str]]]:
+    """The first ``steps`` greedy BPE merges over a word → frequency
+    table: the merge rows (step, left, right, merged, pair_freq) and
+    every word's final symbols."""
+    state = {w: list(w) for w in word_freq}
+    merges = []
+    for step in range(1, steps + 1):
+        pairs: Counter = Counter()
+        for w, syms in state.items():
+            for pair in zip(syms, syms[1:]):
+                pairs[pair] += word_freq[w]
+        if not pairs:
+            break
+        (a, b), freq = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((step, a, b, a + b, freq))
+        for w, syms in state.items():
+            out, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and (syms[i], syms[i + 1]) == (a, b):
+                    out.append(a + b)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            state[w] = out
+    return merges, state
+
+
+def _word_freq(spark: SparkSession, sf_dir: str) -> dict[str, int]:
+    """Corpus word → frequency: one Spark aggregation, collected."""
     docs = load_table(spark, sf_dir, "documents")
     wf = (
         docs.select(F.explode(TX.tokens(F.col("text"))).alias("word"))
@@ -55,133 +88,28 @@ def _word_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    return _symbols_from_wf(wf)
+    return {r["word"]: r["freq"] for r in wf.collect()}
 
 
-def _symbols_from_wf(wf: DataFrame) -> DataFrame:
-    """Explode a (word, freq) table to the BPE initial symbol state —
-    injectable seam so pathological vocabularies (self-overlapping
-    pairs like 'aaaa') can drive ``_merge_step`` directly in tests."""
-    return wf.select(
-        "word", "freq", F.posexplode(F.expr(_CHARS_EXPR)).alias("pos", "sym")
-    )
-
-
-def _merge_step(state: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """One BPE iteration: returns (best-merge row, merged symbol state)."""
-    w = Window.partitionBy("word").orderBy("pos")
-    st = state.withColumn("nxt", F.lead("sym").over(w)).withColumn(
-        "rn", F.row_number().over(w)
-    )
-    best = (
-        st.filter(F.col("nxt").isNotNull())
-        .groupBy(F.col("sym").alias("left"), F.col("nxt").alias("right"))
-        .agg(F.sum("freq").alias("pair_freq"))
-        .orderBy(F.desc("pair_freq"), "left", "right")
-        .limit(1)
-    )
-    marked = st.crossJoin(
-        F.broadcast(
-            best.select(
-                F.col("left").alias("best_a"), F.col("right").alias("best_b")
-            )
-        )
-    ).withColumn(
-        "pair_start",
-        (F.col("sym") == F.col("best_a")) & (F.col("nxt") == F.col("best_b")),
-    )
-    # greedy L→R non-overlap: islands of consecutive pair-start rows,
-    # keep even in-island offsets
-    w_rn = Window.partitionBy("word").orderBy("rn")
-    starts = (
-        marked.filter("pair_start")
-        .withColumn("isl", F.col("rn") - F.row_number().over(w_rn))
-        .withColumn(
-            "off",
-            F.row_number().over(Window.partitionBy("word", "isl").orderBy("rn")) - 1,
-        )
-        .filter(F.col("off") % 2 == 0)
-        .select("word", "rn", F.lit(True).alias("sel"))
-    )
-    st2 = marked.join(starts, ["word", "rn"], "left")
-    st2 = st2.withColumn(
-        "consumed", F.coalesce(F.lag("sel").over(w_rn), F.lit(False))
-    )
-    new_state = st2.filter(~F.col("consumed")).select(
-        "word",
-        "freq",
-        F.col("rn").alias("pos"),
-        F.when(F.col("sel"), F.concat("best_a", "best_b"))
-        .otherwise(F.col("sym"))
-        .alias("sym"),
-    )
-    return best, new_state
-
-
-# learned (merge DataFrames, final symbol state) per (application, sf):
-# both registered queries consume the same K checkpointed iterations.
-# Bounded: entries pin localCheckpoint blocks, so a long-lived session
-# sweeping many sf dirs (census, scaling runs) must not accumulate them.
-_LEARN_CACHE: dict[tuple[str, str], tuple[list[DataFrame], DataFrame]] = register_plan_cache({})
-_LEARN_CACHE_MAX = 8
-
-
-def _learn(spark: SparkSession, sf_dir: str) -> tuple[list[DataFrame], DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _LEARN_CACHE:
-        # true LRU: refresh recency on hit, else an early-inserted hot
-        # sf dir would be evicted before a cold later one
-        _LEARN_CACHE[key] = _LEARN_CACHE.pop(key)
-    else:
-        if len(_LEARN_CACHE) >= _LEARN_CACHE_MAX:
-            # evict the LEAST-RECENTLY-USED entry (dicts preserve
-            # insertion order; hits re-insert at the end). Dropping
-            # the Python references releases the py4j proxies via
-            # CPython refcounting, which detaches the JVM-side
-            # DataFrames and lets ContextCleaner reclaim the
-            # localCheckpoint blocks — there is no public unpersist
-            # handle for checkpoint RDDs, so reference-drop IS the
-            # release mechanism.
-            _LEARN_CACHE.pop(next(iter(_LEARN_CACHE)))
-        state = _word_symbols(spark, sf_dir)
-        merges: list[DataFrame] = []
-        for _ in range(BPE_STEPS):
-            best, state = _merge_step(state)
-            # truncate the iterative lineage: state_k references both
-            # best_k and state_{k-1}, so the unrolled logical plan
-            # doubles per step (2^K subtrees by step K). The
-            # vocab-bounded state is tiny — materialize it per
-            # iteration, exactly like the connected-components loop
-            # (operators/components.py). best's checkpoint is lazy: it
-            # materializes as a side effect of state's eager job (one
-            # job per iteration instead of two) and is then served from
-            # blocks to downstream consumers.
-            best = best.localCheckpoint(eager=False)
-            state = state.localCheckpoint(eager=True)
-            merges.append(best)
-        _LEARN_CACHE[key] = (merges, state)
-    return _LEARN_CACHE[key]
+def _bpe_state(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The learned symbol state: one (word, freq, pos, sym) row per
+    symbol of every vocabulary word after the K merges."""
+    word_freq = _word_freq(spark, sf_dir)
+    _, state = learn_bpe(word_freq, BPE_STEPS)
+    rows = [
+        (w, word_freq[w], pos, sym)
+        for w, syms in state.items()
+        for pos, sym in enumerate(syms)
+    ]
+    return spark.createDataFrame(rows, _STATE_SCHEMA)
 
 
 def bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First K=6 BPE merges learned from the corpus word-frequency
-    table. See module docstring for the plan shape; the corpus is
-    scanned exactly once."""
-    merges, _ = _learn(spark, sf_dir)
-    rows = [
-        best.select(
-            F.lit(k).alias("step"),
-            "left",
-            "right",
-            F.concat("left", "right").alias("merged"),
-            "pair_freq",
-        )
-        for k, best in enumerate(merges, start=1)
-    ]
-    out = rows[0]
-    for m in rows[1:]:
-        out = out.unionByName(m)
-    return out.orderBy("step")
+    table (fewer when the pairs run out). See module docstring; the
+    corpus is scanned exactly once."""
+    merges, _ = learn_bpe(_word_freq(spark, sf_dir), BPE_STEPS)
+    return spark.createDataFrame(merges, _MERGES_SCHEMA)
 
 
 def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,7 +122,7 @@ def bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus one partial-agg'd doc_id aggregate. No document text is ever
     re-processed per merge; that is the production shape of distributed
     tokenization under a trained tokenizer."""
-    _, state = _learn(spark, sf_dir)
+    state = _bpe_state(spark, sf_dir)
     word_len = state.groupBy("word").agg(F.count(F.lit(1)).alias("n_bpe"))
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
@@ -220,7 +148,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale stage is one broadcast join of word → ordered symbols
     onto position-exploded doc words plus a PER-DOC sequence window
     (bounded by document length — never a corpus-global sort)."""
-    _, state = _learn(spark, sf_dir)
+    state = _bpe_state(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id", F.posexplode(TX.tokens(F.col("text"))).alias("wpos", "word")
@@ -243,7 +171,7 @@ def bpe_encode_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the exact encoding (the clean_fp pattern of
     remove_duplicate_spans) instead of corpus-sized sequence rows
     through the harness."""
-    _, state = _learn(spark, sf_dir)
+    state = _bpe_state(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id", F.posexplode(TX.tokens(F.col("text"))).alias("wpos", "word")
@@ -292,7 +220,7 @@ def bpe_decode_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale stage stays one broadcast join + one per-doc bounded
     window + one doc-grain aggregate. Every doc reports: empty docs
     decode to '' and trivially round-trip."""
-    _, state = _learn(spark, sf_dir)
+    state = _bpe_state(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
         "doc_id", F.posexplode(TX.tokens(F.col("text"))).alias("wpos", "word")
@@ -355,7 +283,7 @@ def bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bpe_encode_fingerprint`` for the next driver window."""
     from ..operators.rank import global_rank
 
-    _, state = _learn(spark, sf_dir)
+    state = _bpe_state(spark, sf_dir)
     counts = state.groupBy("sym").agg(
         F.sum("freq").cast("long").alias("n_occurrences")
     )
@@ -369,7 +297,9 @@ def bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_blocks() -> str:
-    """The shared WITH-chain: K unrolled iterations as DuckDB CTEs."""
+    """The shared WITH-chain: K unrolled iterations as DuckDB CTEs.
+    ``best{k}`` is empty once no adjacent pair is left; the LEFT JOIN
+    then carries ``state{k-1}`` forward unchanged."""
     blocks = [
         f"""wf AS MATERIALIZED (
   SELECT word, COUNT(*) AS freq FROM (
@@ -403,7 +333,7 @@ best{k} AS MATERIALIZED (
 marked{k} AS MATERIALIZED (
   SELECT s.*, b.left_s AS best_a, b.right_s AS best_b,
          s.sym = b.left_s AND s.nxt = b.right_s AS pair_start
-  FROM st{k} s CROSS JOIN best{k} b
+  FROM st{k} s LEFT JOIN best{k} b ON TRUE
 ),
 starts{k} AS MATERIALIZED (
   SELECT word, rn, TRUE AS sel FROM (

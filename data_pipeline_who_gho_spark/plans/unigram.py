@@ -166,7 +166,6 @@ def unigram_train(
     chars, counts from the last E-step."""
     words = word_freqs(spark, sf_dir)
     # the word table is consumed once per EM round — materialize it
-    # (same rationale as the BPE learn loop's localCheckpoint)
     words = words.localCheckpoint(eager=True)
     inv = {
         r["piece"]: int(r["count"])

@@ -16,11 +16,11 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
+
+from ..operators.load import atomic_overwrite
 
 
 class EtlStateRepository:
@@ -66,7 +66,9 @@ class EtlStateRepository:
     # and _read_all returns NAIVE OS-local datetimes (what
     # collect() returned) — so naive writers and readers keep
     # round-tripping on hosts whose local zone is not UTC, and
-    # consumers never see a naive/aware comparison TypeError.
+    # consumers never see a naive/aware comparison TypeError. A naive
+    # value ON DISK (files written before the column was tz-aware) is
+    # a UTC instant.
 
     def _read_all(self) -> dict[str, dict]:
         import pyarrow.parquet as pq
@@ -77,8 +79,10 @@ class EtlStateRepository:
         out: dict[str, dict] = {}
         for r in table.to_pylist():
             ts = r["last_successful_run_at"]
-            if ts is not None and ts.tzinfo is not None:
-                ts = ts.astimezone().replace(tzinfo=None)  # aware -> OS-local naive
+            if ts is not None:
+                if ts.tzinfo is None:  # older file: naive UTC instant
+                    ts = ts.replace(tzinfo=timezone.utc)
+                ts = ts.astimezone().replace(tzinfo=None)
             out[r["process_name"]] = {
                 "last_successful_run_at": ts,
                 "checkpoint_state": json.loads(r["checkpoint_state"]) if r["checkpoint_state"] else None,
@@ -111,14 +115,12 @@ class EtlStateRepository:
             ],
             schema=self._schema(),
         )
-        tmp = self.path + ".tmp-" + uuid.uuid4().hex[:8]
-        os.makedirs(tmp, exist_ok=True)
-        pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
-        old = self.path + ".old-" + uuid.uuid4().hex[:8]
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+
+        def write(tmp: str) -> None:
+            os.makedirs(tmp)
+            pq.write_table(table, os.path.join(tmp, "part-00000.parquet"))
+
+        atomic_overwrite(self.path, write)
 
     # -- API (parity with etl/state.py) ------------------------------------
 

@@ -100,3 +100,36 @@ def test_state_roundtrip(spark, tmp_path):
     assert state.get_watermark("p1") is not None
     state.clear_checkpoint("p1")
     assert state.get_state("p1")["checkpoint_state"] is None
+
+
+def test_naive_watermark_on_disk_reads_as_utc(spark, tmp_path, monkeypatch):
+    """Older state files store the watermark as a NAIVE UTC instant;
+    reading one on a non-UTC host must not relabel it as local time."""
+    import os
+    import time
+    from datetime import datetime, timezone
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        path = os.path.join(str(tmp_path), "etl_state")
+        os.makedirs(path)
+        table = pa.table(
+            {
+                "process_name": ["p1"],
+                "last_successful_run_at": pa.array(
+                    [datetime(2024, 1, 15, 12, 0)], pa.timestamp("us")
+                ),
+                "checkpoint_state": pa.array([None], pa.string()),
+            }
+        )
+        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+        wm = EtlStateRepository(spark, str(tmp_path)).get_watermark("p1")
+        assert wm.astimezone(timezone.utc) == datetime(2024, 1, 15, 12, 0, tzinfo=timezone.utc)
+        assert wm == datetime(2024, 1, 15, 7, 0)  # naive OS-local (EST)
+    finally:
+        monkeypatch.undo()
+        time.tzset()

@@ -12,6 +12,7 @@ from data_pipeline_who_gho_spark.plans.tokenizer import (
     BPE_STEPS,
     bpe_learn_merges,
     bpe_token_counts,
+    learn_bpe,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -112,33 +113,17 @@ def test_shard_manifest_partitions_corpus(spark):
     )
 
 
-def test_bpe_greedy_overlap_rule_pathological(spark):
+def test_bpe_greedy_overlap_rule_pathological():
     """Self-overlapping argmax pairs ('aaaa' merging ('a','a')) must
     follow the greedy left-to-right non-overlap rule: 'aaaa' -> aa,aa;
     'aaa' -> aa,a; 'aaaaa' -> aa,aa,a — cross-checked against the
-    pure-Python reference over several iterations."""
-    from data_pipeline_who_gho_spark.plans.tokenizer import (
-        _merge_step,
-        _symbols_from_wf,
-    )
-
-    wf = {"aaaa": 10, "aaa": 7, "aaaaa": 3, "abab": 5, "baaab": 2}
-    state = _symbols_from_wf(
-        spark.createDataFrame(list(wf.items()), "word string, freq long")
-    )
-    expected_merges, expected_state = _py_bpe(wf, 4)
-    got = []
-    for step in range(1, 5):
-        best, state = _merge_step(state)
-        state = state.localCheckpoint(eager=True)
-        b = best.collect()[0]
-        got.append((step, b["left"], b["right"], b["left"] + b["right"], b["pair_freq"]))
-    assert got == expected_merges
-    final = {}
-    for r in state.collect():
-        final.setdefault(r["word"], []).append((r["pos"], r["sym"]))
-    final = {w: [s for _, s in sorted(v)] for w, v in final.items()}
-    assert final == expected_state
+    pure-Python reference over several iterations, including a
+    vocabulary whose adjacent pairs run out before the last step."""
+    for wf in (
+        {"aaaa": 10, "aaa": 7, "aaaaa": 3, "abab": 5, "baaab": 2},
+        {"ab": 4, "x": 1},  # adjacent pairs run out after one merge
+    ):
+        assert learn_bpe(wf, 4) == _py_bpe(wf, 4)
 
 
 def test_bpe_encode_matches_reference_sequences(spark):
@@ -226,3 +211,40 @@ def test_bpe_vocab_matches_reference_and_oracle(spark):
     con.sql(f"CREATE VIEW documents AS SELECT * FROM '{SF}/documents.parquet'")
     oracle = [tuple(r) for r in con.sql(BPE_VOCAB_SQL).fetchall()]
     assert got == oracle
+
+
+def test_bpe_keeps_state_when_pairs_run_out(spark, tmp_path):
+    """Once no adjacent pair is left before step K, learning stops and the
+    symbol state is kept — in the Spark plan and in the DuckDB twin."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_who_gho_spark.plans.tokenizer import (
+        BPE_LEARN_MERGES_SQL,
+        BPE_TOKEN_COUNTS_SQL,
+    )
+
+    texts = {1: "ab ab ab", 2: "ab x"}
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(list(texts), pa.int64()),
+                "text": list(texts.values()),
+                "lang": ["en"] * len(texts),
+                "source": ["web"] * len(texts),
+                "n_chars": pa.array([len(t) for t in texts.values()], pa.int64()),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    sf = str(tmp_path)
+    merges = [(1, "a", "b", "ab", 4)]
+    counts = [(1, 3, 3), (2, 2, 2)]
+    assert [tuple(r) for r in bpe_learn_merges(spark, sf).collect()] == merges
+    assert [tuple(r) for r in bpe_token_counts(spark, sf).collect()] == counts
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'")
+    assert con.sql(BPE_LEARN_MERGES_SQL).fetchall() == merges
+    assert con.sql(BPE_TOKEN_COUNTS_SQL).fetchall() == counts
