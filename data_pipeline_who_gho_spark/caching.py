@@ -14,13 +14,13 @@ from collections.abc import Callable, Hashable, MutableMapping
 
 from pyspark.sql import DataFrame
 
-# Explicit registry of every module-level persisted-frame cache.  Tools
-# that must hash plans hermetically (tools/stale_check.py) or release
-# executor storage at a gate boundary (tools/check_correctness.py)
-# iterate THIS list; scanning module vars for a ``*_CACHE`` suffix is
+# Explicit registry of every module-level persisted-frame cache.  Callers
+# that release executor storage at a boundary (the correctness gate in
+# tools/check_correctness.py, and perfbench before each timed curation
+# op) iterate THIS list; scanning module vars for a ``*_CACHE`` suffix is
 # kept only as an AUDIT (``unregistered_caches``) so a cache that
-# forgets to register fails loudly instead of silently reintroducing
-# order-dependent plan-hash drift.
+# forgets to register fails loudly instead of silently carrying frames
+# from one query into the next.
 PLAN_CACHES: list[MutableMapping] = []
 
 # Shared eviction policy for the persisted-frame caches (VERDICT r07
@@ -32,12 +32,9 @@ PLAN_CACHES: list[MutableMapping] = []
 # Compositions in this engine are a handful of ranked frames deep at
 # most; 16 is generous headroom for that DEPTH, independent of how many
 # queries the registry carries, because lifecycle pressure is handled
-# elsewhere: eviction unpersists, and the gate and scaling harnesses
-# (tools/check_correctness.py, tools/strong_scaling.py) call
-# clear_plan_caches() at their boundaries, so steady-state storage is
-# bounded per plan, not per session.  (bench.py deliberately does NOT
-# clear between its interleaved passes — cross-pass cache hits ARE the
-# steady state a long-lived session measures.)
+# elsewhere: eviction unpersists, and the correctness gate and perfbench
+# call clear_plan_caches() at their boundaries, so steady-state storage
+# is bounded per plan, not per session.
 PERSIST_CACHE_LIMIT = 16
 
 
@@ -70,7 +67,7 @@ def clear_plan_caches() -> None:
 def unregistered_caches() -> list[str]:
     """Audit: module-level ``*_CACHE`` dicts in this package that are
     NOT in ``PLAN_CACHES`` (by identity). Non-empty means someone added
-    a cache without registering it — stale_check refuses to run.
+    a cache without registering it (tests/test_registry.py fails).
 
     Walks the WHOLE package with pkgutil and imports every module
     first: a cache in a module nothing has imported yet (e.g. a plans

@@ -9,7 +9,7 @@ from .transform import (
     safe_double,
 )
 from .validate import ValidationResult, validate_split
-from .quality import DataQualityError, check_not_empty, check_no_null_keys, run_dq_checks
+from .quality import DataQualityError, run_dq_checks
 from .load import upsert, append_rejects
 
 __all__ = [
@@ -24,8 +24,6 @@ __all__ = [
     "ValidationResult",
     "validate_split",
     "DataQualityError",
-    "check_not_empty",
-    "check_no_null_keys",
     "run_dq_checks",
     "upsert",
     "append_rejects",

@@ -5,15 +5,19 @@ Mirrors the DAG's two inline SQL assertions
 the declared key columns. Raising fails the run — same observable contract
 as the reference's task failure + alert email.
 
-Both checks are single aggregations; Spark plans them as partial+final
-count with no data movement beyond one scalar per partition.
+One path: both checks are one aggregation (``_dq_metrics``), run either
+eagerly (``run_dq_checks``) or as an ``Observation`` on a write
+(``observed_dq``); Spark plans it as partial+final count with no data
+movement beyond one scalar pair per partition.
 """
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -21,52 +25,37 @@ class DataQualityError(AssertionError):
     """A DQ constraint was violated (reference: raise → task fail → email)."""
 
 
-def check_not_empty(df: DataFrame, name: str = "table") -> int:
-    """Q1: SELECT COUNT(*) must be > 0 (who_gho_etl_dag.py:194-198)."""
-    n = df.count()
-    if n == 0:
-        raise DataQualityError(f"DQ failed: {name} is empty")
-    return n
-
-
-def check_no_null_keys(df: DataFrame, keys: Sequence[str], name: str = "table") -> int:
-    """Q2: zero rows with null in any key column (who_gho_etl_dag.py:200-206).
-
-    Single pass: conditional count instead of a filter+count re-scan.
-    """
+def _dq_metrics(keys: Sequence[str]) -> list[Column]:
+    """Q1 + Q2 as two aggregate expressions over one scan: the row count,
+    and the count of rows with a null in any key column."""
     if not keys:
-        raise ValueError("check_no_null_keys requires at least one key column")
-    cond = None
-    for k in keys:
-        c = F.col(k).isNull()
-        cond = c if cond is None else (cond | c)
-    bad = df.select(F.count(F.when(cond, F.lit(1))).alias("bad")).first()["bad"]
-    if bad:
-        raise DataQualityError(f"DQ failed: {name} has {bad} rows with null keys {list(keys)}")
-    return int(bad)
+        raise ValueError("a DQ check requires at least one key column")
+    null_key = reduce(operator.or_, [F.col(k).isNull() for k in keys])
+    return [
+        F.count(F.lit(1)).alias("row_count"),
+        F.count(F.when(null_key, F.lit(1))).alias("null_key_rows"),
+    ]
+
+
+def _enforce(metrics, keys: Sequence[str], name: str) -> dict:
+    """Raise on a Q1/Q2 violation; otherwise return the metric dict."""
+    if metrics["row_count"] == 0:
+        raise DataQualityError(f"DQ failed: {name} is empty")
+    if metrics["null_key_rows"]:
+        raise DataQualityError(
+            f"DQ failed: {name} has {metrics['null_key_rows']} rows with null keys {list(keys)}"
+        )
+    return {
+        "row_count": int(metrics["row_count"]),
+        "null_key_rows": int(metrics["null_key_rows"]),
+    }
 
 
 def run_dq_checks(df: DataFrame, keys: Sequence[str], name: str = "fact_observation") -> dict:
     """The reference's full DQ task (Q1 + Q2), fused into ONE scan: both
     metrics come from a single aggregation instead of the reference's two
     SQL statements — same fail-fast contract, half the table reads."""
-    if not keys:
-        raise ValueError("run_dq_checks requires at least one key column")
-    cond = None
-    for k in keys:
-        c = F.col(k).isNull()
-        cond = c if cond is None else (cond | c)
-    row = df.select(
-        F.count(F.lit(1)).alias("row_count"),
-        F.count(F.when(cond, F.lit(1))).alias("null_key_rows"),
-    ).first()
-    if row["row_count"] == 0:
-        raise DataQualityError(f"DQ failed: {name} is empty")
-    if row["null_key_rows"]:
-        raise DataQualityError(
-            f"DQ failed: {name} has {row['null_key_rows']} rows with null keys {list(keys)}"
-        )
-    return {"row_count": row["row_count"], "null_key_rows": int(row["null_key_rows"])}
+    return _enforce(df.select(*_dq_metrics(keys)).first(), keys, name)
 
 
 def observed_dq(df: DataFrame, keys: Sequence[str], name: str = "fact_observation"):
@@ -81,27 +70,6 @@ def observed_dq(df: DataFrame, keys: Sequence[str], name: str = "fact_observatio
     """
     from pyspark.sql import Observation
 
-    if not keys:
-        raise ValueError("observed_dq requires at least one key column")
     obs = Observation(f"dq_{name}")
-    cond = None
-    for k in keys:
-        c = F.col(k).isNull()
-        cond = c if cond is None else (cond | c)
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("row_count"),
-        F.count(F.when(cond, F.lit(1))).alias("null_key_rows"),
-    )
-
-    def finish() -> dict:
-        m = obs.get
-        if m["row_count"] == 0:
-            raise DataQualityError(f"DQ failed: {name} is empty")
-        if m["null_key_rows"]:
-            raise DataQualityError(
-                f"DQ failed: {name} has {m['null_key_rows']} rows with null keys {list(keys)}"
-            )
-        return dict(m)
-
-    return observed, finish
+    observed = df.observe(obs, *_dq_metrics(keys))
+    return observed, lambda: _enforce(obs.get, keys, name)

@@ -9,7 +9,7 @@ the lazy plan IS the hand-off (SURVEY §3 lifecycle mapping).
 from __future__ import annotations
 
 import argparse
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -53,14 +53,15 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
 
     # -- extract (fixture-file source stands in for the OData fetcher) ----
     obs_raw = spark.read.format(cfg.source_format).load(cfg.source_observations)
-    if cfg.limit is not None:  # limit=0 means zero rows, not "no limit"
-        obs_raw = obs_raw.limit(cfg.limit)
 
     # watermark: new-data-only unless full_reingest (declared in the
     # reference's README.md:105 / dag params but never implemented there)
     wm = None if cfg.full_reingest else state.get_watermark(cfg.process_name)
     if wm is not None and "ingested_at" in obs_raw.columns:
         obs_raw = obs_raw.filter(obs_raw["ingested_at"] > wm)
+    # limit caps the NEW rows, so it applies after the watermark cut
+    if cfg.limit is not None:  # limit=0 means zero rows, not "no limit"
+        obs_raw = obs_raw.limit(cfg.limit)
 
     # -- transform + validate ---------------------------------------------
     obs_clean = clean_observations(obs_raw)
@@ -128,7 +129,11 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
 
     # watermark = max event-time actually processed, NOT wall-clock run
     # completion: a processing-time watermark silently skips rows that
-    # land in the source late with earlier ingested_at stamps
+    # land in the source late with earlier ingested_at stamps. A limited
+    # run leaves it where it was: the rows it did not load may carry
+    # earlier stamps than the ones it did.
+    if cfg.limit is not None:
+        return metrics
     if "ingested_at" in obs_raw.columns:
         max_seen = obs_raw.agg(F.max("ingested_at")).first()[0]
         if max_seen is not None:

@@ -306,10 +306,7 @@ def compact_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact). The output is the MAPPING (source, frag_id -> out_shard)
     plus fragment volumes — the plan a rewrite job executes; emitting
     the decision rather than rewritten bytes keeps the op
-    oracle-checkable. (``operators/maintenance.compact_table`` is the
-    physical rewrite counterpart: it coalesces an actual parquet
-    layout to ~target-size files; this op is the content-aware
-    ASSIGNMENT that decides what merges with what.)
+    oracle-checkable.
 
     Scale shape: identical to ``training2.seq_packing`` — folding is
     sequential per stream, so streams (sources; at 100 TB, table

@@ -846,7 +846,7 @@ def lsh_code_column(embedding: str) -> Column:
         ) + ")"
         # lambda params are named x_*/y_* to match what py4j-composed
         # higher-order functions produce, keeping the analyzed plan text
-        # (and so PLAN_HASHES.json) bit-identical to the prior builder
+        # bit-identical to the py4j-composed form
         proj = (
             f"aggregate(zip_with({vdec}, {wj}, (x_2, y_2) -> x_2 * y_2), "
             f"CAST(0 AS DECIMAL(38,10)), "

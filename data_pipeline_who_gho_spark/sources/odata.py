@@ -2,7 +2,7 @@
 
 The reference builds real OData requests — ``$top``/``$skip`` pagination,
 ``$filter=SpatialDim eq '...'``, ``$orderby=TimeDim asc``, 404 → empty
-page, request-error skip, retry/backoff (``etl/extract.py:24-153``).
+page, request-error skip (opt-in here), retry/backoff (``etl/extract.py:24-153``).
 This module is that client re-expressed for executor-side fetching: a
 picklable callable matching ``paged.PageFetcher``, so ``fetch_paged``
 fans it out over the key DataFrame (one parallel HTTP stream per key —
@@ -93,8 +93,10 @@ class ODataPageFetcher:
     - 404 → empty page (absent indicator/country combination);
     - other HTTP errors → raise (``fetch_all_pages`` retries with
       backoff, then propagates);
-    - connection errors → empty page when ``skip_request_errors`` (the
-      reference's default), else raise-and-retry.
+    - connection errors → raise, so ``fetch_all_pages`` retries the page
+      and a key is never cut short silently. ``skip_request_errors=True``
+      opts into the reference's behaviour (empty page, which ends the
+      key's pagination).
     """
 
     def __init__(
@@ -102,7 +104,7 @@ class ODataPageFetcher:
         base_url: str = WHO_GHO_BASE_URL,
         transport: Transport | None = None,
         orderby: str | None = "TimeDim asc",
-        skip_request_errors: bool = True,
+        skip_request_errors: bool = False,
         key_sep: str = "|",
     ):
         self.base_url = base_url

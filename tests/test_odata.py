@@ -4,6 +4,8 @@ all network-free via the injected transport."""
 
 from __future__ import annotations
 
+from urllib.error import URLError
+
 import pytest
 
 from data_pipeline_who_gho_spark.sources.odata import (
@@ -75,10 +77,11 @@ def test_server_error_raises():
         f("IND_A|USA", 0, 10)
 
 
-def test_request_error_skipped_by_default():
+def test_request_error_skipped_when_opted_in():
     tr = FakeODataTransport({"IND_A": _obs("IND_A", "USA", 3)}, flaky_first=True)
-    f = ODataPageFetcher(base_url="http://x/api", transport=tr)
-    # reference parity: skip_request_errors swallows the connection error
+    f = ODataPageFetcher(base_url="http://x/api", transport=tr,
+                         skip_request_errors=True)
+    # reference parity, opt-in: skip_request_errors swallows the error
     assert f("IND_A|USA", 0, 10) == []
 
 
@@ -115,3 +118,27 @@ def test_spark_fan_out_with_odata_fetcher(spark):
     rows = out.collect()
     assert len(rows) == 20  # 12 + 3 + 5 + 0 (IND_B|FRA absent -> empty)
     assert {r["IndicatorCode"] for r in rows} == {"IND_A", "IND_B"}
+
+
+class _ResetOnce:
+    """Wraps a transport; the first request for ``$skip=<skip>`` fails
+    with a connection error, every later request is served."""
+
+    def __init__(self, inner, skip: int):
+        self.inner, self.marker, self.tripped = inner, f"%24skip={skip}", False
+
+    def __call__(self, url: str):
+        if not self.tripped and self.marker in url:
+            self.tripped = True
+            raise URLError("connection reset")
+        return self.inner(url)
+
+
+def test_connection_error_mid_key_is_retried_by_default():
+    """One connection reset on page 2 must not end the key's pagination:
+    the default fetcher raises, ``fetch_all_pages`` retries the page, and
+    every record arrives."""
+    tr = _ResetOnce(FakeODataTransport({"IND_A": _obs("IND_A", "USA", 5)}), skip=2)
+    f = ODataPageFetcher(base_url="http://x/api", transport=tr)
+    rows = list(fetch_all_pages(f, "IND_A|USA", page_size=2, backoff_s=0.0))
+    assert [r["Id"] for r in rows] == [f"IND_A-USA-{i}" for i in range(5)]

@@ -3,10 +3,14 @@ parquet; re-run idempotency; reject side-channel populated."""
 
 from __future__ import annotations
 
+from datetime import datetime, timezone
+
 import pytest
+from pyspark.sql import types as T
 
 from data_pipeline_who_gho_spark.pipeline import PipelineConfig, run_pipeline
 from data_pipeline_who_gho_spark.schemas import RAW_OBSERVATION
+from data_pipeline_who_gho_spark.sources.state import EtlStateRepository
 
 
 @pytest.fixture()
@@ -76,6 +80,55 @@ def test_pipeline_limit(spark, tmp_path, sources):
     cfg.limit = 1
     metrics = run_pipeline(spark, cfg)
     assert metrics["row_count"] == 1
+
+
+def _stamped_source(spark, path, rows):
+    """One parquet file of ``(Id, SpatialDim, ingested_at day in Jan 2024)``
+    observations, in the given order."""
+    base = {"IndicatorCode": "WHOSIS_000001", "SpatialDimType": "COUNTRY",
+            "TimeDim": "2019", "TimeDimType": "YEAR",
+            "NumericValue": "1.0", "Value": "1.0"}
+    schema = T.StructType(
+        RAW_OBSERVATION.fields + [T.StructField("ingested_at", T.TimestampType())]
+    )
+    recs = [
+        {**base, "Id": i, "SpatialDim": c,
+         "ingested_at": datetime(2024, 1, day, tzinfo=timezone.utc)}
+        for i, c, day in rows
+    ]
+    spark.createDataFrame(recs, schema).coalesce(1).write.parquet(str(path))
+
+
+def _fact_ids(spark, wh):
+    fact = spark.read.parquet(f"{wh}/fact_observation")
+    return sorted(r["observation_id"] for r in fact.collect())
+
+
+def test_limited_run_keeps_watermark(spark, tmp_path):
+    """A limited run loads only part of the new rows, so it must leave the
+    watermark where it was: moving it to the loaded rows' max
+    ``ingested_at`` would make the next run skip the rows left behind."""
+    src, wh = tmp_path / "obs", str(tmp_path / "wh")
+    _stamped_source(spark, src, [("1", "USA", 5), ("2", "FRA", 3)])
+    cfg = PipelineConfig(warehouse_dir=wh, source_observations=str(src), limit=1)
+    run_pipeline(spark, cfg)
+    assert EtlStateRepository(spark, wh).get_watermark(cfg.process_name) is None
+    cfg.limit = None
+    run_pipeline(spark, cfg)
+    assert _fact_ids(spark, wh) == ["1", "2"]
+
+
+def test_limit_applies_after_watermark_filter(spark, tmp_path):
+    """``limit`` caps the NEW rows: taking the first N source rows before
+    the watermark cut could pick only already-loaded ones."""
+    src, wh = tmp_path / "obs", str(tmp_path / "wh")
+    _stamped_source(spark, src, [("2", "FRA", 3), ("1", "USA", 5)])
+    state = EtlStateRepository(spark, wh)
+    state.set_last_successful_run_at("who_gho_etl", datetime(2024, 1, 4, tzinfo=timezone.utc))
+    wm = state.get_watermark("who_gho_etl")
+    run_pipeline(spark, PipelineConfig(warehouse_dir=wh, source_observations=str(src), limit=1))
+    assert _fact_ids(spark, wh) == ["1"]
+    assert EtlStateRepository(spark, wh).get_watermark("who_gho_etl") == wm
 
 
 def test_pipeline_mixed_null_ids_rerun_idempotent(spark, tmp_path):

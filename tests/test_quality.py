@@ -2,34 +2,29 @@ from __future__ import annotations
 
 import pytest
 
-from data_pipeline_who_gho_spark.operators import (
-    DataQualityError,
-    check_no_null_keys,
-    check_not_empty,
-    run_dq_checks,
-)
+from data_pipeline_who_gho_spark.operators import DataQualityError, run_dq_checks
 
 
 def test_not_empty_pass(spark):
     df = spark.createDataFrame([(1,)], "a INT")
-    assert check_not_empty(df) == 1
+    assert run_dq_checks(df, ["a"])["row_count"] == 1
 
 
 def test_not_empty_fail(spark):
     df = spark.createDataFrame([], "a INT")
-    with pytest.raises(DataQualityError):
-        check_not_empty(df)
+    with pytest.raises(DataQualityError, match="empty"):
+        run_dq_checks(df, ["a"])
 
 
 def test_null_keys_pass(spark):
     df = spark.createDataFrame([("x", "y")], "k1 STRING, k2 STRING")
-    assert check_no_null_keys(df, ["k1", "k2"]) == 0
+    assert run_dq_checks(df, ["k1", "k2"])["null_key_rows"] == 0
 
 
 def test_null_keys_fail(spark):
     df = spark.createDataFrame([("x", None), (None, "y"), ("a", "b")], "k1 STRING, k2 STRING")
     with pytest.raises(DataQualityError, match="2 rows"):
-        check_no_null_keys(df, ["k1", "k2"])
+        run_dq_checks(df, ["k1", "k2"])
 
 
 def test_run_dq_checks(spark):
