@@ -6,11 +6,16 @@ The reference's load is a single multi-row
 re-loading the same batch is a no-op.
 
 Spark-first design: the MERGE is a **broadcast-able left-anti join +
-unionByName** over parquet-at-rest, committed with a write-temp /
-atomic-swap protocol (parquet has no transactions; the swap directory
-rename gives us all-or-nothing visibility, the closest parity to the
-reference's one-transaction upsert). On a Delta/Iceberg-backed catalog the
-same function maps 1:1 onto ``MERGE INTO`` — the call-site contract is
+unionByName** over parquet-at-rest. Parquet has no transactions, so a
+commit writes the new data to a temp dir and then swaps it in by
+directory renames (``_swap``), one unit at a time: the whole table, or
+each partition an upsert touches. Neither is all-or-nothing. A crash
+between the two renames of a unit leaves that unit absent, with its old
+data parked in a ``.``-named dir beside it that Spark does not read; a
+crash between two partition units leaves some partitions new and some
+old; a crash during the temp write leaves a ``<table>.tmp-*`` dir and
+the table untouched. On a Delta/Iceberg-backed catalog the same
+function maps 1:1 onto ``MERGE INTO`` — the call-site contract is
 identical, so swapping the table format is a one-line change here.
 
 Scale notes: the anti-join shuffles on the upsert key unless the update
@@ -26,6 +31,7 @@ import os
 import shutil
 import uuid
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,26 +46,42 @@ def _table_path(warehouse_dir: str, table: str) -> str:
     return os.path.join(warehouse_dir, table)
 
 
+def _tmp_dir(path: str) -> str:
+    return path + ".tmp-" + uuid.uuid4().hex[:8]
+
+
+def _swap(new: str, live: str) -> None:
+    """Replace directory ``live`` with ``new`` by two renames; a missing
+    ``new`` drops ``live``. The replaced dir is parked under a name that
+    starts with ``.``, which Spark's partition discovery skips, and then
+    deleted. A crash between the renames leaves ``live`` absent and the
+    parked ``.<name>.old-*`` dir beside it (recoverable by hand)."""
+    parent, name = os.path.split(live)
+    old = os.path.join(parent, f".{name}.old-{uuid.uuid4().hex[:8]}")
+    if os.path.exists(live):
+        os.rename(live, old)
+    if os.path.exists(new):
+        os.makedirs(parent, exist_ok=True)
+        os.rename(new, live)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def atomic_overwrite(path: str, write_fn) -> None:
-    """Write-temp → directory-swap commit, shared by upsert and
-    compaction. ``write_fn(tmp_path)`` materializes the new table into a
-    fresh temp dir; then the live directory is replaced by two renames.
+    """Write-temp → directory-swap commit of a whole table.
+    ``write_fn(tmp_path)`` materializes the new table into a fresh temp
+    dir, then ``_swap`` replaces the live directory.
 
     Honesty note: the rename pair is not one atomic operation — there is
     a sub-millisecond window where the path is absent, and a crash inside
-    it leaves only the ``.old-*`` dir (recoverable by hand). This matches
-    the engine's single-writer posture (the reference runs with
-    ``max_active_runs=1``, dags/who_gho_etl_dag.py:35); concurrent
-    writers/appenders need external coordination or a transactional
-    table format (Delta/Iceberg), onto which this call-site maps 1:1.
+    it leaves only the parked old dir. This matches the engine's
+    single-writer posture (the reference runs with ``max_active_runs=1``,
+    dags/who_gho_etl_dag.py:35); concurrent writers/appenders need
+    external coordination or a transactional table format
+    (Delta/Iceberg), onto which this call-site maps 1:1.
     """
-    tmp = path + ".tmp-" + uuid.uuid4().hex[:8]
+    tmp = _tmp_dir(path)
     write_fn(tmp)
-    old = path + ".old-" + uuid.uuid4().hex[:8]
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
+    _swap(tmp, path)
 
 
 def read_table(spark: SparkSession, warehouse_dir: str, table: str) -> DataFrame | None:
@@ -158,25 +180,23 @@ def upsert(
     """L2: idempotent keyed upsert into a parquet warehouse table.
 
     Protocol: (1) assert batch keys unique, (2) plan merge vs current
-    table, (3) write to a fresh temp dir, (4) atomic directory swap.
+    table, (3) write to a fresh temp dir, (4) swap each unit in.
     Re-running the same batch yields a byte-identical table (idempotency —
     the reference's core guarantee, etl/load.py:45-48).
 
-    ``partition_by`` lays the table out hive-partitioned (e.g. fact by
-    time_dim) so downstream year-filtered queries prune partitions at
-    plan time — the at-rest layout SURVEY §1 calls for, AND scopes the
-    rewrite: only partitions touched by the update batch are merged and
-    swapped; every other partition's files are left byte-identical on
-    disk. At 100 TB a dim-sized daily update rewrites a handful of
-    partition directories, not the fact table — the parquet-at-rest
-    equivalent of Delta's partition-pruned ``MERGE INTO``.
+    A unit is the whole table when there is no target, no
+    ``partition_by``, or the table on disk is flat (a flat table becomes
+    partitioned). Otherwise ``partition_by`` scopes the rewrite: only
+    partitions touched by the update batch are merged and swapped, one at
+    a time; every other partition's files stay byte-identical on disk —
+    the parquet-at-rest equivalent of Delta's partition-pruned
+    ``MERGE INTO``.
 
     Affected set = partitions the update rows land in ∪ partitions that
     currently hold an updated key (a key whose partition value changes
-    must be deleted from its old partition). The second leg is a
-    key-semi-join scan of the target — column-pruned to key+partition
-    columns, far cheaper than a rewrite; callers whose keys embed the
-    partition column can expect Catalyst to prune it further.
+    must be deleted from its old partition; a partition left with no rows
+    is dropped). The second leg is a key-semi-join scan of the target,
+    column-pruned to key+partition columns.
     """
     dup = (
         updates.groupBy(*[F.col(k) for k in keys])
@@ -190,65 +210,32 @@ def upsert(
 
     target = read_table(spark, warehouse_dir, table)
     path = _table_path(warehouse_dir, table)
-
     pcols = list(partition_by or [])
-    if target is None or not pcols or not _is_hive_partitioned(path, pcols[0]):
-        merged = merge_upsert(target, updates, keys)
+    tmp = _tmp_dir(path)
 
-        def _write(tmp: str) -> None:
-            writer = merged.write.mode("overwrite")
-            if pcols:
-                writer = writer.partitionBy(*pcols)
-            writer.parquet(tmp)
+    units = [(tmp, path)]  # (new, live): the whole table
+    if target is not None and pcols and _is_hive_partitioned(path, pcols[0]):
+        landing = updates.select(*pcols)
+        moved = target.join(updates.select(*keys), on=list(keys), how="left_semi").select(*pcols)
+        affected = [tuple(r) for r in landing.union(moved).distinct().collect()]
+        if not affected:
+            return  # empty batch: nothing to rewrite
 
-        atomic_overwrite(path, _write)
-        return
+        def _in_partition(values):
+            eqs = [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(pcols, values)]
+            return reduce(lambda a, b: a & b, eqs)
 
-    _upsert_partition_scoped(spark, target, updates, path, keys, pcols)
+        target = target.filter(reduce(lambda a, b: a | b, map(_in_partition, affected)))
+        rels = [_hive_part_dir(pcols, t) for t in affected]
+        units = [(os.path.join(tmp, rel), os.path.join(path, rel)) for rel in rels]
 
-
-def _upsert_partition_scoped(
-    spark: SparkSession,
-    target: DataFrame,
-    updates: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    pcols: Sequence[str],
-) -> None:
-    from functools import reduce
-
-    landing = updates.select(*pcols).distinct()
-    moved = (
-        target.join(updates.select(*keys), on=list(keys), how="left_semi")
-        .select(*pcols)
-        .distinct()
-    )
-    affected = [tuple(r) for r in landing.union(moved).distinct().collect()]
-    if not affected:
-        return  # empty batch: nothing to rewrite
-
-    def _tuple_pred(t):
-        eqs = [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(pcols, t)]
-        return reduce(lambda a, b: a & b, eqs)
-
-    cond = reduce(lambda a, b: a | b, [_tuple_pred(t) for t in affected])
-    merged = merge_upsert(target.filter(cond), updates, keys)
-
-    tmp = path + ".tmp-" + uuid.uuid4().hex[:8]
-    merged.write.mode("overwrite").partitionBy(*pcols).parquet(tmp)
+    writer = merge_upsert(target, updates, keys).write.mode("overwrite")
+    if pcols:
+        writer = writer.partitionBy(*pcols)
     try:
-        for t in affected:
-            rel = _hive_part_dir(pcols, t)
-            new_dir = os.path.join(tmp, rel)
-            live_dir = os.path.join(path, rel)
-            old = live_dir + ".old-" + uuid.uuid4().hex[:8]
-            if os.path.exists(live_dir):
-                os.rename(live_dir, old)
-            if os.path.exists(new_dir):
-                os.makedirs(os.path.dirname(live_dir), exist_ok=True)
-                os.rename(new_dir, live_dir)
-            # else: the partition lost its last row (key moved away) — drop it
-            shutil.rmtree(old, ignore_errors=True)
+        writer.parquet(tmp)
+        for new, live in units:
+            _swap(new, live)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 

@@ -10,8 +10,9 @@ from __future__ import annotations
 
 import argparse
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.load import append_rejects, upsert
@@ -23,7 +24,14 @@ from .operators.validate import (
     observation_rules,
     validate_split,
 )
-from .schemas import COUNTRY_RENAMES, INDICATOR_RENAMES, OBSERVATION_RENAMES
+from .schemas import (
+    COUNTRY_RENAMES,
+    FACT_OBSERVATION,
+    INDICATOR_RENAMES,
+    OBSERVATION_RENAMES,
+    RAW_COUNTRY,
+    RAW_INDICATOR,
+)
 from .session import get_spark
 from .sources.state import EtlStateRepository
 
@@ -43,7 +51,7 @@ class PipelineConfig:
 
 
 def _rename(df, mapping):
-    return df.select(*[df[a].alias(b) for a, b in mapping.items() if a in df.columns])
+    return df.select(*[df[a].alias(b) for a, b in mapping.items()])
 
 
 def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
@@ -64,65 +72,51 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
         obs_raw = obs_raw.limit(cfg.limit)
 
     # -- transform + validate ---------------------------------------------
-    obs_clean = clean_observations(obs_raw)
-    obs_res = validate_split(obs_clean, observation_rules())
-    obs_final = _rename(obs_res.validated, OBSERVATION_RENAMES)
-
-    # upsert key mirrors clean_observations' dedup fallback: composite
-    # natural key when Id is unusable (etl/transform.py:45-48) — a null
-    # observation_id never matches an anti-join and would either crash the
-    # dup-key guard or accumulate duplicates
-    id_usable = (
-        obs_final.where(obs_final["observation_id"].isNotNull()).limit(1).count() > 0
-    )
-    fact_keys = (
-        ["observation_id"]
-        if id_usable
-        else ["indicator_code", "spatial_dim", "time_dim"]
-    )
-    if id_usable:
-        # A mixed batch can still carry NULL-Id rows; a NULL key never
-        # matches the merge anti-join (NULL != NULL), so re-running the
-        # same batch would append a duplicate and silently break the
-        # idempotent re-run guarantee. Give those rows a deterministic
-        # surrogate derived from the composite natural key instead —
-        # identical across re-runs, so the upsert stays a no-op.
-        obs_final = obs_final.withColumn(
-            "observation_id",
-            F.coalesce(
-                F.col("observation_id"),
-                F.concat_ws(
-                    ":",
-                    F.lit("ck"),
-                    "indicator_code",
-                    "spatial_dim",
-                    F.col("time_dim").cast("string"),
-                ),
+    obs_res = validate_split(clean_observations(obs_raw), observation_rules())
+    # The fact is always keyed on observation_id. A row without an Id
+    # gets a deterministic surrogate from the composite natural key (the
+    # reference's dedup fallback, etl/transform.py:45-48), whether some
+    # or none of the batch's rows carry an Id: a NULL key never matches
+    # the merge anti-join, and the surrogate is identical across re-runs,
+    # so re-loading the batch stays a no-op.
+    obs_final = _rename(obs_res.validated, OBSERVATION_RENAMES).withColumn(
+        "observation_id",
+        F.coalesce(
+            F.col("observation_id"),
+            F.concat_ws(
+                ":",
+                F.lit("ck"),
+                "indicator_code",
+                "spatial_dim",
+                F.col("time_dim").cast("string"),
             ),
-        )
+        ),
+    )
 
     # -- load: dims first, fact last (who_gho_etl_dag.py:177-187) ---------
+    rejected = [obs_res.rejected]
     if cfg.source_indicators:
-        ind_raw = spark.read.parquet(cfg.source_indicators)
+        ind_raw = spark.read.schema(RAW_INDICATOR).parquet(cfg.source_indicators)
         ind_res = validate_split(clean_indicators(ind_raw), indicator_rules())
         upsert(spark, _rename(ind_res.validated, INDICATOR_RENAMES), cfg.warehouse_dir,
                "dim_indicator", ["indicator_code"])
-        append_rejects(ind_res.rejected, cfg.warehouse_dir)
+        rejected.append(ind_res.rejected)
     if cfg.source_countries:
-        c_raw = spark.read.parquet(cfg.source_countries)
+        c_raw = spark.read.schema(RAW_COUNTRY).parquet(cfg.source_countries)
         c_res = validate_split(clean_countries(c_raw), country_rules())
         upsert(spark, _rename(c_res.validated, COUNTRY_RENAMES), cfg.warehouse_dir,
                "dim_country", ["country_code"])
-        append_rejects(c_res.rejected, cfg.warehouse_dir)
+        rejected.append(c_res.rejected)
 
     # fact partitioned by year at rest: year-filtered analytics (the A1/A4
     # query family) prune partitions instead of scanning the full fact
     upsert(spark, obs_final, cfg.warehouse_dir, "fact_observation",
-           fact_keys, partition_by=["time_dim"])
-    append_rejects(obs_res.rejected, cfg.warehouse_dir)
+           ["observation_id"], partition_by=["time_dim"])
+    # every stage's rejects in one append: one file per run
+    append_rejects(reduce(DataFrame.unionByName, rejected).coalesce(1), cfg.warehouse_dir)
 
     # -- DQ gate (fails the run on violation) ------------------------------
-    fact = spark.read.parquet(f"{cfg.warehouse_dir}/fact_observation")
+    fact = spark.read.schema(FACT_OBSERVATION).parquet(f"{cfg.warehouse_dir}/fact_observation")
     metrics = run_dq_checks(
         fact, ["indicator_code", "spatial_dim", "time_dim"], "fact_observation"
     )

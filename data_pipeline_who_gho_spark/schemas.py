@@ -68,8 +68,10 @@ DIM_COUNTRY = T.StructType(
 # observation_id is STRING: the API's Id arrives stringly-typed and the
 # validation layer keeps Pydantic's coerce_numbers_to_str semantics
 # (etl/validate.py:8) — the reference's Integer PK (etl/models.py:26) is a
-# DB-side re-typing we intentionally do not replicate; nullable because
-# the composite natural key takes over when Id is absent (T6 fallback).
+# DB-side re-typing we intentionally do not replicate. The pipeline
+# gives a row without an Id the ``ck:<indicator>:<spatial>:<year>``
+# surrogate; nullable because a warehouse loaded by older code from a
+# feed without Ids holds NULL ids.
 FACT_OBSERVATION = T.StructType(
     [
         T.StructField("observation_id", T.StringType(), True),
@@ -80,16 +82,6 @@ FACT_OBSERVATION = T.StructType(
         T.StructField("time_dim_type", T.StringType(), False),
         T.StructField("numeric_value", T.DoubleType(), True),
         T.StructField("value", T.StringType(), True),
-    ]
-)
-
-ETL_STATE = T.StructType(
-    [
-        T.StructField("process_name", T.StringType(), False),
-        T.StructField("last_successful_run_at", T.TimestampType(), True),
-        # JSON string (as stored by sources/state.py), mirroring the
-        # reference's JSON column (etl/models.py:42)
-        T.StructField("checkpoint_state", T.StringType(), True),
     ]
 )
 

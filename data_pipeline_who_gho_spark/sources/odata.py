@@ -31,6 +31,7 @@ from urllib.error import HTTPError, URLError
 from urllib.parse import quote, urlencode
 
 WHO_GHO_BASE_URL = "https://ghoapi.azureedge.net/api"
+KEY_SEP = "|"  # splits a fetch key into entity set and country
 
 # transport(url) -> (http_status, decoded_json_body)
 Transport = Callable[[str], tuple[int, dict]]
@@ -105,16 +106,14 @@ class ODataPageFetcher:
         transport: Transport | None = None,
         orderby: str | None = "TimeDim asc",
         skip_request_errors: bool = False,
-        key_sep: str = "|",
     ):
         self.base_url = base_url
         self.transport = transport or UrllibTransport()
         self.orderby = orderby
         self.skip_request_errors = skip_request_errors
-        self.key_sep = key_sep
 
     def url_for(self, key: str, page: int, page_size: int) -> str:
-        entity_set, _, country = key.partition(self.key_sep)
+        entity_set, _, country = key.partition(KEY_SEP)
         return build_odata_url(
             self.base_url,
             entity_set,

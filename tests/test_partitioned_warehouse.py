@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from data_pipeline_who_gho_spark.operators.load import read_table, upsert
 
@@ -85,3 +87,56 @@ def test_upsert_drops_emptied_partition_on_key_move(spark, tmp_path):
     assert not os.path.exists(os.path.join(table, "time_dim=2019"))
     rows = {(r["id"], r["time_dim"], r["v"]) for r in read_table(spark, wh, "fact").collect()}
     assert rows == {("1", 2018, 1.0), ("2", 2021, 20.0)}
+
+
+def test_upsert_flat_table_to_partitioned(spark, tmp_path):
+    """A table written flat and then upserted with ``partition_by`` is
+    rewritten whole, hive-partitioned, with the batch's rows winning."""
+    wh = str(tmp_path)
+    b1 = spark.createDataFrame(
+        [("1", 2018, 1.0), ("2", 2019, 2.0)], "id STRING, time_dim INT, v DOUBLE"
+    )
+    upsert(spark, b1, wh, "fact", ["id"])
+    table = os.path.join(wh, "fact")
+    assert not any(e.startswith("time_dim=") for e in os.listdir(table))
+
+    b2 = spark.createDataFrame(
+        [("2", 2019, 20.0), ("3", 2020, 3.0)], "id STRING, time_dim INT, v DOUBLE"
+    )
+    upsert(spark, b2, wh, "fact", ["id"], partition_by=["time_dim"])
+
+    entries = os.listdir(table)
+    assert {e for e in entries if e.startswith("time_dim=")} == {
+        "time_dim=2018", "time_dim=2019", "time_dim=2020"
+    }
+    assert not any(e.endswith(".parquet") for e in entries)
+    rows = {(r["id"], r["time_dim"], r["v"]) for r in read_table(spark, wh, "fact").collect()}
+    assert rows == {("1", 2018, 1.0), ("2", 2019, 20.0), ("3", 2020, 3.0)}
+
+
+def test_crash_mid_partition_swap_keeps_time_dim_int(spark, tmp_path, monkeypatch):
+    """A crash after the live partition is moved aside but before the new
+    one is renamed in must not leave a directory that Spark reads as a
+    partition: ``time_dim`` stays INT and every value is an integer."""
+    wh = str(tmp_path)
+    b1 = spark.createDataFrame(
+        [("1", 2018, 1.0), ("2", 2019, 2.0)], "id STRING, time_dim INT, v DOUBLE"
+    )
+    upsert(spark, b1, wh, "fact", ["id"], partition_by=["time_dim"])
+
+    real_rename = os.rename
+
+    def crash_on_install(src, dst):
+        if ".tmp-" in str(src):  # the rename that installs the new partition
+            raise OSError("simulated crash mid-swap")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crash_on_install)
+    b2 = spark.createDataFrame([("2", 2019, 20.0)], "id STRING, time_dim INT, v DOUBLE")
+    with pytest.raises(OSError, match="simulated crash"):
+        upsert(spark, b2, wh, "fact", ["id"], partition_by=["time_dim"])
+    monkeypatch.undo()
+
+    fact = spark.read.parquet(os.path.join(wh, "fact"))
+    assert isinstance(fact.schema["time_dim"].dataType, T.IntegerType)
+    assert all(isinstance(r["time_dim"], int) for r in fact.collect())

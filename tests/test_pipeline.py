@@ -3,13 +3,14 @@ parquet; re-run idempotency; reject side-channel populated."""
 
 from __future__ import annotations
 
+import os
 from datetime import datetime, timezone
 
 import pytest
 from pyspark.sql import types as T
 
 from data_pipeline_who_gho_spark.pipeline import PipelineConfig, run_pipeline
-from data_pipeline_who_gho_spark.schemas import RAW_OBSERVATION
+from data_pipeline_who_gho_spark.schemas import RAW_COUNTRY, RAW_INDICATOR, RAW_OBSERVATION
 from data_pipeline_who_gho_spark.sources.state import EtlStateRepository
 
 
@@ -57,10 +58,10 @@ def test_pipeline_idempotent(spark, tmp_path, sources):
     assert m1 == m2  # re-run is a no-op on the fact table
 
 
-def test_pipeline_all_null_ids_uses_composite_key(spark, tmp_path, raw_observations):
-    # clean_observations' composite-key fallback must flow through to the
-    # upsert key — null observation_ids would otherwise crash the dup
-    # guard or duplicate on re-run
+def test_pipeline_all_null_ids_get_surrogate_keys(spark, tmp_path, raw_observations):
+    # A feed with no Ids is keyed like any other: every row gets the
+    # ck:<indicator>:<spatial>:<year> surrogate, so a NULL observation_id
+    # can neither crash the dup guard nor duplicate on re-run
     recs = [{**r, "Id": None} for r in raw_observations]
     src = tmp_path / "src_nullid"
     spark.createDataFrame(recs, RAW_OBSERVATION).write.parquet(str(src))
@@ -70,8 +71,48 @@ def test_pipeline_all_null_ids_uses_composite_key(spark, tmp_path, raw_observati
         full_reingest=True,
     )
     m1 = run_pipeline(spark, cfg)
-    m2 = run_pipeline(spark, cfg)  # idempotent on the natural key
+    m2 = run_pipeline(spark, cfg)  # idempotent on the surrogate key
     assert m1 == m2 == {"row_count": 4, "null_key_rows": 0}
+    assert _fact_ids(spark, cfg.warehouse_dir) == [
+        "ck:WHOSIS_000001:FRA:2019",
+        "ck:WHOSIS_000001:GBR:2020",
+        "ck:WHOSIS_000001:USA:2019",
+        "ck:WHOSIS_000002:JPN:2019",
+    ]
+
+
+def _reject_files(wh):
+    rej = os.path.join(wh, "rejected_record")
+    return sorted(f for f in os.listdir(rej) if f.endswith(".parquet"))
+
+
+def test_pipeline_writes_rejects_once_per_run(spark, tmp_path, raw_observations,
+                                              raw_indicators, raw_countries):
+    """Indicator, country and observation rejects land in one new
+    ``rejected_record`` file per run."""
+    src = tmp_path / "src"
+    obs = raw_observations + [
+        {"Id": "6", "IndicatorCode": "WHOSIS_000001", "SpatialDim": "ITA",
+         "SpatialDimType": None, "TimeDim": "2019", "TimeDimType": "YEAR",
+         "NumericValue": "83.0", "Value": "83.0"},  # rejected: no SpatialDimType
+    ]
+    ind = raw_indicators + [{"IndicatorCode": None, "IndicatorName": "x", "Language": "EN"}]
+    cty = raw_countries + [{"Code": "ITA", "Title": None}]
+    spark.createDataFrame(obs, RAW_OBSERVATION).write.parquet(str(src / "obs"))
+    spark.createDataFrame(ind, RAW_INDICATOR).write.parquet(str(src / "ind"))
+    spark.createDataFrame(cty, RAW_COUNTRY).write.parquet(str(src / "cty"))
+    cfg = _cfg(tmp_path, src, full_reingest=True)
+    wh = cfg.warehouse_dir
+
+    seen: list[str] = []
+    for _ in range(2):
+        run_pipeline(spark, cfg)
+        files = _reject_files(wh)
+        new = [f for f in files if f not in seen]
+        assert len(new) == 1
+        rejects = spark.read.parquet(os.path.join(wh, "rejected_record", new[0]))
+        assert rejects.count() == 3
+        seen = files
 
 
 def test_pipeline_limit(spark, tmp_path, sources):
