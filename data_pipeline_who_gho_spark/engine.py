@@ -9,19 +9,22 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .sources.catalog import TABLES, register_views
+from .schemas import WAREHOUSE_SCHEMAS
+from .sources.catalog import register_views
 
 
 class Engine:
-    """Thin query facade: register tables once, then ``sql()`` away.
+    """Thin query facade: register tables, then ``sql()`` away.
 
-    ``attach_warehouse`` exposes pipeline-produced tables (dim_indicator,
-    dim_country, fact_observation, rejected_record); ``attach_fixtures``
-    exposes the driver's TPC-H-ish tables. Both are temp views — every
-    query planned by Catalyst against parquet scans.
+    ``attach_warehouse`` registers the pipeline-produced tables
+    (dim_indicator, dim_country, fact_observation, rejected_record) on
+    every call, with their declared schemas: an attach runs no Spark job,
+    and a table absent on disk is an empty view of its schema.
+    ``attach_fixtures`` exposes the driver's TPC-H-ish tables. Both are
+    temp views — every query planned by Catalyst against parquet scans.
     """
 
-    WAREHOUSE_TABLES = ["dim_indicator", "dim_country", "fact_observation", "rejected_record"]
+    WAREHOUSE_TABLES = list(WAREHOUSE_SCHEMAS)
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -31,10 +34,13 @@ class Engine:
         return self
 
     def attach_warehouse(self, warehouse_dir: str) -> "Engine":
-        for t in self.WAREHOUSE_TABLES:
+        for t, schema in WAREHOUSE_SCHEMAS.items():
             path = os.path.join(warehouse_dir, t)
             if os.path.exists(path):
-                self.spark.read.parquet(path).createOrReplaceTempView(t)
+                df = self.spark.read.schema(schema).parquet(path)
+            else:
+                df = self.spark.createDataFrame([], schema)
+            df.createOrReplaceTempView(t)
         return self
 
     def sql(self, query: str) -> DataFrame:

@@ -92,6 +92,15 @@ REJECTED_RECORD = T.StructType(
     ]
 )
 
+# The warehouse's tables in attach order, each with its declared schema, so
+# a reader needs no footer inference (see Engine.attach_warehouse).
+WAREHOUSE_SCHEMAS = {
+    "dim_indicator": DIM_INDICATOR,
+    "dim_country": DIM_COUNTRY,
+    "fact_observation": FACT_OBSERVATION,
+    "rejected_record": REJECTED_RECORD,
+}
+
 # Required (NOT NULL) key columns of the fact table — drives the null-drop
 # transform (etl/transform.py:42) and the DQ key-scan (who_gho_etl_dag.py:200-206).
 OBSERVATION_KEY_COLUMNS = ["IndicatorCode", "SpatialDim", "TimeDim"]
