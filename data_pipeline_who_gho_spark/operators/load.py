@@ -6,17 +6,28 @@ The reference's load is a single multi-row
 re-loading the same batch is a no-op.
 
 Spark-first design: the MERGE is a **broadcast-able left-anti join +
-unionByName** over parquet-at-rest. Parquet has no transactions, so a
-commit writes the new data to a temp dir and then swaps it in by
-directory renames (``_swap``), one unit at a time: the whole table, or
-each partition an upsert touches. Neither is all-or-nothing. A crash
-between the two renames of a unit leaves that unit absent, with its old
-data parked in a ``.``-named dir beside it that Spark does not read; a
-crash between two partition units leaves some partitions new and some
-old; a crash during the temp write leaves a ``<table>.tmp-*`` dir and
-the table untouched. On a Delta/Iceberg-backed catalog the same
-function maps 1:1 onto ``MERGE INTO`` — the call-site contract is
-identical, so swapping the table format is a one-line change here.
+unionByName** over parquet-at-rest. Parquet has no transactions, so every
+write (an upsert, the state table, a migration) commits one unit per
+table through ``atomic_overwrite``: the whole new table is written to a
+temp dir, then swapped in by two directory renames. What a crash leaves:
+
+- during the temp write: the table untouched, plus a ``<table>.tmp-*``
+  dir (removed on the way out unless the process dies);
+- between the two renames: no ``<table>`` dir, and its old data parked
+  in ``.<table>.old-*`` beside it, which Spark does not read. A read of
+  the bare path fails loudly (``PATH_NOT_FOUND``);
+- after the second rename: the new table, plus the parked dir until its
+  delete finishes.
+
+Restore rule: a swap never removes a table on purpose, so a parked dir
+without its table is the old state of a cut swap, and a parked dir
+beside its table is a leftover. ``restore_parked`` renames the first
+back and deletes the second; ``read_table`` and the state repository's
+read call it first, so the next load or state read sees the old state
+again, and a table never has two parked dirs. On a Delta/Iceberg-backed
+catalog the same function maps 1:1 onto ``MERGE INTO`` — the call-site
+contract is identical, so swapping the table format is a one-line change
+here.
 
 Scale notes: the anti-join shuffles on the upsert key unless the update
 batch is small enough to broadcast — the common case for dimension upserts
@@ -31,7 +42,6 @@ import os
 import shutil
 import uuid
 from collections.abc import Sequence
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -46,46 +56,52 @@ def _table_path(warehouse_dir: str, table: str) -> str:
     return os.path.join(warehouse_dir, table)
 
 
-def _tmp_dir(path: str) -> str:
-    return path + ".tmp-" + uuid.uuid4().hex[:8]
-
-
-def _swap(new: str, live: str) -> None:
-    """Replace directory ``live`` with ``new`` by two renames; a missing
-    ``new`` drops ``live``. The replaced dir is parked under a name that
-    starts with ``.``, which Spark's partition discovery skips, and then
-    deleted. A crash between the renames leaves ``live`` absent and the
-    parked ``.<name>.old-*`` dir beside it (recoverable by hand)."""
-    parent, name = os.path.split(live)
-    old = os.path.join(parent, f".{name}.old-{uuid.uuid4().hex[:8]}")
-    if os.path.exists(live):
-        os.rename(live, old)
-    if os.path.exists(new):
-        os.makedirs(parent, exist_ok=True)
-        os.rename(new, live)
-    shutil.rmtree(old, ignore_errors=True)
+def restore_parked(path: str) -> None:
+    """Apply the restore rule to the table at ``path``: with ``path``
+    absent, its parked ``.<name>.old-*`` dir is the old state of a swap
+    cut between its renames and is renamed back; with ``path`` present,
+    a parked dir is what a finished swap failed to delete, and goes."""
+    parent, name = os.path.split(path)
+    if not os.path.isdir(parent):
+        return
+    for entry in os.listdir(parent):
+        if entry.startswith(f".{name}.old-"):
+            if os.path.exists(path):
+                shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
+            else:
+                os.rename(os.path.join(parent, entry), path)
 
 
 def atomic_overwrite(path: str, write_fn) -> None:
-    """Write-temp → directory-swap commit of a whole table.
-    ``write_fn(tmp_path)`` materializes the new table into a fresh temp
-    dir, then ``_swap`` replaces the live directory.
+    """The warehouse's one commit routine: ``write_fn(tmp)`` writes the
+    whole new table to a temp dir, the live dir is parked under a
+    ``.``-name that Spark's listing skips, the temp dir is renamed in,
+    and the parked dir is deleted. Any failure removes the temp dir; the
+    parked dir is never deleted before the new table is in (module
+    docstring: what a crash leaves, and the restore rule).
 
-    Honesty note: the rename pair is not one atomic operation — there is
-    a sub-millisecond window where the path is absent, and a crash inside
-    it leaves only the parked old dir. This matches the engine's
-    single-writer posture (the reference runs with ``max_active_runs=1``,
-    dags/who_gho_etl_dag.py:35); concurrent writers/appenders need
-    external coordination or a transactional table format
+    The rename pair is not one atomic operation. This matches the
+    engine's single-writer posture (the reference runs with
+    ``max_active_runs=1``, dags/who_gho_etl_dag.py:35); concurrent
+    writers need external coordination or a transactional table format
     (Delta/Iceberg), onto which this call-site maps 1:1.
     """
-    tmp = _tmp_dir(path)
-    write_fn(tmp)
-    _swap(tmp, path)
+    parent, name = os.path.split(path)
+    suffix = uuid.uuid4().hex[:8]
+    tmp, old = f"{path}.tmp-{suffix}", os.path.join(parent, f".{name}.old-{suffix}")
+    try:
+        write_fn(tmp)
+        if os.path.exists(path):
+            os.rename(path, old)
+        os.rename(tmp, path)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def read_table(spark: SparkSession, warehouse_dir: str, table: str) -> DataFrame | None:
     path = _table_path(warehouse_dir, table)
+    restore_parked(path)
     if not os.path.exists(path):
         return None
     return spark.read.parquet(path)
@@ -139,36 +155,6 @@ def merge_cdc(
     return kept.unionByName(upserts)
 
 
-# Characters Spark escapes in hive-style partition directory names
-# (org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils).
-_HIVE_UNSAFE = set('"#%\'*/:=?\\\x7f{[]^')
-
-
-def _hive_escape(val: str) -> str:
-    return "".join(
-        f"%{ord(ch):02X}" if ch in _HIVE_UNSAFE or ord(ch) < 32 else ch
-        for ch in val
-    )
-
-
-def _hive_part_dir(pcols: Sequence[str], values: Sequence) -> str:
-    """Relative hive directory for one partition tuple, Spark-compatible."""
-    segs = []
-    for col, val in zip(pcols, values):
-        sval = "__HIVE_DEFAULT_PARTITION__" if val is None else _hive_escape(str(val))
-        segs.append(f"{_hive_escape(col)}={sval}")
-    return os.path.join(*segs)
-
-
-def _is_hive_partitioned(path: str, first_pcol: str) -> bool:
-    try:
-        return any(
-            entry.startswith(f"{first_pcol}=") for entry in os.listdir(path)
-        )
-    except OSError:
-        return False
-
-
 def upsert(
     spark: SparkSession,
     updates: DataFrame,
@@ -179,65 +165,30 @@ def upsert(
 ) -> None:
     """L2: idempotent keyed upsert into a parquet warehouse table.
 
-    Protocol: (1) assert batch keys unique, (2) plan merge vs current
-    table, (3) write to a fresh temp dir, (4) swap each unit in.
-    Re-running the same batch yields a byte-identical table (idempotency —
-    the reference's core guarantee, etl/load.py:45-48).
-
-    A unit is the whole table when there is no target, no
-    ``partition_by``, or the table on disk is flat (a flat table becomes
-    partitioned). Otherwise ``partition_by`` scopes the rewrite: only
-    partitions touched by the update batch are merged and swapped, one at
-    a time; every other partition's files stay byte-identical on disk —
-    the parquet-at-rest equivalent of Delta's partition-pruned
-    ``MERGE INTO``.
-
-    Affected set = partitions the update rows land in ∪ partitions that
-    currently hold an updated key (a key whose partition value changes
-    must be deleted from its old partition; a partition left with no rows
-    is dropped). The second leg is a key-semi-join scan of the target,
-    column-pruned to key+partition columns.
+    Protocol: (1) one aggregate gives the batch's distinct keys and its
+    largest key group, (2) a duplicate key raises, (3) an empty batch into
+    an existing table writes nothing, (4) otherwise ``atomic_overwrite``
+    replaces the whole table with the merge, hive-partitioned by
+    ``partition_by`` when given: one swap unit per table. Re-running the
+    same batch yields the same rows (idempotency — the reference's core
+    guarantee, etl/load.py:45-48).
     """
-    dup = (
+    n_keys, max_rows = (
         updates.groupBy(*[F.col(k) for k in keys])
         .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .count()
+        .agg(F.count(F.lit(1)), F.max("count"))
+        .first()
     )
-    if dup:
+    if n_keys and max_rows > 1:
         raise UpsertKeyError(f"duplicate keys in update batch for {table} on {list(keys)}")
 
     target = read_table(spark, warehouse_dir, table)
-    path = _table_path(warehouse_dir, table)
-    pcols = list(partition_by or [])
-    tmp = _tmp_dir(path)
-
-    units = [(tmp, path)]  # (new, live): the whole table
-    if target is not None and pcols and _is_hive_partitioned(path, pcols[0]):
-        landing = updates.select(*pcols)
-        moved = target.join(updates.select(*keys), on=list(keys), how="left_semi").select(*pcols)
-        affected = [tuple(r) for r in landing.union(moved).distinct().collect()]
-        if not affected:
-            return  # empty batch: nothing to rewrite
-
-        def _in_partition(values):
-            eqs = [F.col(c).eqNullSafe(F.lit(v)) for c, v in zip(pcols, values)]
-            return reduce(lambda a, b: a & b, eqs)
-
-        target = target.filter(reduce(lambda a, b: a | b, map(_in_partition, affected)))
-        rels = [_hive_part_dir(pcols, t) for t in affected]
-        units = [(os.path.join(tmp, rel), os.path.join(path, rel)) for rel in rels]
-
+    if target is not None and not n_keys:
+        return  # empty batch: nothing to merge
     writer = merge_upsert(target, updates, keys).write.mode("overwrite")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    try:
-        writer.parquet(tmp)
-        for new, live in units:
-            _swap(new, live)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    atomic_overwrite(_table_path(warehouse_dir, table), writer.parquet)
 
 
 def append_rejects(rejected: DataFrame, warehouse_dir: str, table: str = "rejected_record") -> None:

@@ -432,9 +432,9 @@ def etl_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     TWICE — the second run must be a metrics-identical no-op (the
     reference's idempotent re-run guarantee; enforced, a drift raises).
     The registered result is the fact table at rest afterwards, so the
-    whole lifecycle (including the load path's atomic swap and the
-    partition-scoped merge) is hash-pinned against the oracle's pure
-    SQL derivation of the same feed."""
+    whole lifecycle (including the load path's whole-table swap of the
+    year-partitioned fact) is hash-pinned against the oracle's pure SQL
+    derivation of the same feed."""
 
     def build() -> DataFrame:
         src = _json_obs_source(spark, sf_dir)

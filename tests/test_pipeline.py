@@ -159,6 +159,21 @@ def test_limited_run_keeps_watermark(spark, tmp_path):
     assert _fact_ids(spark, wh) == ["1", "2"]
 
 
+def test_rerun_of_watermarked_batch_writes_no_fact_file(spark, tmp_path, tree_bytes):
+    """Re-running a batch the watermark already covers loads an empty batch:
+    no file under ``fact_observation`` is added, removed or changed."""
+    src, wh = tmp_path / "obs", str(tmp_path / "wh")
+    _stamped_source(spark, src, [("1", "USA", 5), ("2", "FRA", 3)])
+    cfg = PipelineConfig(warehouse_dir=wh, source_observations=str(src))
+    run_pipeline(spark, cfg)
+    before = tree_bytes(os.path.join(wh, "fact_observation"))
+    assert any(name.endswith(".parquet") for name in before)
+
+    run_pipeline(spark, cfg)
+    assert tree_bytes(os.path.join(wh, "fact_observation")) == before
+    assert _fact_ids(spark, wh) == ["1", "2"]
+
+
 def test_limit_applies_after_watermark_filter(spark, tmp_path):
     """``limit`` caps the NEW rows: taking the first N source rows before
     the watermark cut could pick only already-loaded ones."""

@@ -102,6 +102,22 @@ def test_state_roundtrip(spark, tmp_path):
     assert state.get_state("p1")["checkpoint_state"] is None
 
 
+def test_watermark_survives_crashed_state_write(spark, tmp_path, crash_mid_swap):
+    """A state write cut between the two renames of its swap must leave the
+    previous watermark readable: a lost watermark makes the next run load
+    replays from below it."""
+    from datetime import datetime, timezone
+
+    state = EtlStateRepository(spark, str(tmp_path))
+    state.set_last_successful_run_at("p1", datetime(2024, 1, 15, tzinfo=timezone.utc))
+    wm = state.get_watermark("p1")
+    with crash_mid_swap():
+        state.set_checkpoint_state("p1", {"next_link": "http://x?page=3"})
+
+    assert state.get_watermark("p1") == wm
+    assert state.get_state("p1")["checkpoint_state"] is None
+
+
 def test_naive_watermark_on_disk_reads_as_utc(spark, tmp_path, monkeypatch):
     """Older state files store the watermark as a NAIVE UTC instant;
     reading one on a non-UTC host must not relabel it as local time."""
