@@ -9,6 +9,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .operators.load import restore_parked
 from .schemas import WAREHOUSE_SCHEMAS
 from .sources.catalog import register_views
 
@@ -19,7 +20,9 @@ class Engine:
     ``attach_warehouse`` registers the pipeline-produced tables
     (dim_indicator, dim_country, fact_observation, rejected_record) on
     every call, with their declared schemas: an attach runs no Spark job,
-    and a table absent on disk is an empty view of its schema.
+    a table parked by a cut swap is restored first (the restore rule,
+    ``operators/load.restore_parked``), and a table absent on disk is an
+    empty view of its schema.
     ``attach_fixtures`` exposes the driver's TPC-H-ish tables. Both are
     temp views — every query planned by Catalyst against parquet scans.
     """
@@ -36,6 +39,7 @@ class Engine:
     def attach_warehouse(self, warehouse_dir: str) -> "Engine":
         for t, schema in WAREHOUSE_SCHEMAS.items():
             path = os.path.join(warehouse_dir, t)
+            restore_parked(path)
             if os.path.exists(path):
                 df = self.spark.read.schema(schema).parquet(path)
             else:

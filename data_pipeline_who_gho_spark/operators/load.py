@@ -22,8 +22,9 @@ temp dir, then swapped in by two directory renames. What a crash leaves:
 Restore rule: a swap never removes a table on purpose, so a parked dir
 without its table is the old state of a cut swap, and a parked dir
 beside its table is a leftover. ``restore_parked`` renames the first
-back and deletes the second; ``read_table`` and the state repository's
-read call it first, so the next load or state read sees the old state
+back and deletes the second; ``read_table``, the state repository's
+read, ``Engine.attach_warehouse`` and ``migrate_table`` call it first,
+so the next load, state read, attach or migration sees the old state
 again, and a table never has two parked dirs. On a Delta/Iceberg-backed
 catalog the same function maps 1:1 onto ``MERGE INTO`` — the call-site
 contract is identical, so swapping the table format is a one-line change
@@ -60,7 +61,11 @@ def restore_parked(path: str) -> None:
     """Apply the restore rule to the table at ``path``: with ``path``
     absent, its parked ``.<name>.old-*`` dir is the old state of a swap
     cut between its renames and is renamed back; with ``path`` present,
-    a parked dir is what a finished swap failed to delete, and goes."""
+    a parked dir is what a finished swap failed to delete, and goes.
+
+    A reader that restores while a writer sits between its two renames
+    takes the writer's parked dir back: the writer's install rename then
+    fails loudly (the table dir exists again) and the old state stays."""
     parent, name = os.path.split(path)
     if not os.path.isdir(parent):
         return

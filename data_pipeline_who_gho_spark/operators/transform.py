@@ -28,8 +28,6 @@ from pyspark.sql import functions as F
 
 from ..schemas import OBSERVATION_KEY_COLUMNS, RAW_OBSERVATION
 
-OBSERVATION_REQUIRED_COLUMNS = [f.name for f in RAW_OBSERVATION.fields][1:]  # sans Id
-
 
 def records_to_df(spark: SparkSession, records: list[dict], schema) -> DataFrame:
     """T1: list-of-dicts → DataFrame; empty input → empty frame with schema.
@@ -94,39 +92,34 @@ def dedup_keep_first(
     )
 
 
-def _id_usable(df: DataFrame) -> bool:
-    """Existence probe for a non-null Id (one small Spark job)."""
-    return df.where(F.col("Id").isNotNull()).limit(1).count() > 0
-
-
 def clean_observations(df: DataFrame) -> DataFrame:
     """T2+T3+T4+T5+T6 composed, mirroring ``transform_observations``
-    (etl/transform.py:18-59) including the Id-vs-composite dedup fallback.
+    (etl/transform.py:18-59), with the one fact key decided here.
 
     Output invariants (tests/test_transform.py:4-18): required columns all
     present; NumericValue double; TimeDim nullable int; rows with null key
-    columns dropped; duplicates removed (on Id when usable, else composite).
-    """
-    df = ensure_columns(df, OBSERVATION_REQUIRED_COLUMNS)
-    had_id = "Id" in df.columns
-    if not had_id:
-        df = df.withColumn("Id", F.lit(None).cast("string"))
+    columns dropped; ``Id`` never null; duplicates removed on ``Id``.
 
+    A row without an Id is keyed by the composite natural key as
+    ``ck:<indicator>:<spatial>:<year>`` (the reference's dedup fallback,
+    etl/transform.py:45-48), whether some or none of the batch's rows carry
+    an Id: NULL Ids would otherwise fall into one dedup group, and a NULL
+    key never matches the merge anti-join. The surrogate is the same on
+    every re-run, so re-loading a batch stays a no-op.
+    """
     df = (
-        df.withColumn("NumericValue", safe_double("NumericValue"))
+        ensure_columns(df, RAW_OBSERVATION.fieldNames())
+        .withColumn("NumericValue", safe_double("NumericValue"))
         .withColumn("TimeDim", normalize_year("TimeDim"))
         .na.drop(subset=OBSERVATION_KEY_COLUMNS)
     )
-
-    # Reference branch: dedup on Id when the column has any non-null value,
-    # else composite key (etl/transform.py:45-48). The branch condition is
-    # driver-side plan construction. An injected Id is all-null by
-    # construction (schema-derived — no probe job); a real Id is probed.
-    id_usable = had_id and _id_usable(df)
-    keys = ["Id"] if id_usable else OBSERVATION_KEY_COLUMNS
+    surrogate = F.concat_ws(
+        ":", F.lit("ck"), "IndicatorCode", "SpatialDim", F.col("TimeDim").cast("string")
+    )
+    df = df.withColumn("Id", F.coalesce(F.col("Id").cast("string"), surrogate))
     # pandas keeps first-in-input-order; input order is unobservable across
     # a shuffle, so we pin a deterministic tiebreaker on the full key set.
-    return dedup_keep_first(df, keys, order_by=OBSERVATION_KEY_COLUMNS)
+    return dedup_keep_first(df, ["Id"], order_by=OBSERVATION_KEY_COLUMNS)
 
 
 def clean_indicators(df: DataFrame) -> DataFrame:

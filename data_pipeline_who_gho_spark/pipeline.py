@@ -73,25 +73,8 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
 
     # -- transform + validate ---------------------------------------------
     obs_res = validate_split(clean_observations(obs_raw), observation_rules())
-    # The fact is always keyed on observation_id. A row without an Id
-    # gets a deterministic surrogate from the composite natural key (the
-    # reference's dedup fallback, etl/transform.py:45-48), whether some
-    # or none of the batch's rows carry an Id: a NULL key never matches
-    # the merge anti-join, and the surrogate is identical across re-runs,
-    # so re-loading the batch stays a no-op.
-    obs_final = _rename(obs_res.validated, OBSERVATION_RENAMES).withColumn(
-        "observation_id",
-        F.coalesce(
-            F.col("observation_id"),
-            F.concat_ws(
-                ":",
-                F.lit("ck"),
-                "indicator_code",
-                "spatial_dim",
-                F.col("time_dim").cast("string"),
-            ),
-        ),
-    )
+    # clean_observations keys every row (a ck: surrogate for a NULL Id)
+    obs_final = _rename(obs_res.validated, OBSERVATION_RENAMES)
 
     # -- load: dims first, fact last (who_gho_etl_dag.py:177-187) ---------
     rejected = [obs_res.rejected]

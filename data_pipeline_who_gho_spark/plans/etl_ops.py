@@ -405,8 +405,8 @@ FROM raw
 def etl_paged_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1+S3+S6 under the correctness gate: the fetch plan is built by
     crossJoin fan-out (the reference's indicator × country nested loop),
-    then executed as a distributed paged fetch (pages of 2 per key)
-    through the real mapInPandas executor path. S7 (global limit) is
+    then executed as the driver-side paged fetch (pages of 2 per key,
+    a thread pool over the collected keys). S7 (global limit) is
     covered by unit tests only — a limited fetch is order-nondeterministic
     by design, so it cannot be hash-pinned by an oracle."""
     from ..sources.paged import fetch_paged

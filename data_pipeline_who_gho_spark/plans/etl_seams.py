@@ -81,7 +81,7 @@ def etl_retry_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 under the correctness gate: the paged fetch against a fetcher
     whose FIRST attempt at every (key, page) raises ``ConnectionError``
     (``sources/testing.flaky_fetcher``). ``fetch_all_pages`` retries
-    each page with exponential backoff inside the task (tenacity parity,
+    each page with exponential backoff inside its fetch (tenacity parity,
     reference ``etl/extract.py:30``), so the observable records must be
     byte-identical to an un-flaky fetch — retries are invisible to the
     reader. A retry budget < 2 would return nothing: the oracle pins the

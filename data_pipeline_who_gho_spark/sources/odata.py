@@ -3,10 +3,10 @@
 The reference builds real OData requests — ``$top``/``$skip`` pagination,
 ``$filter=SpatialDim eq '...'``, ``$orderby=TimeDim asc``, 404 → empty
 page, request-error skip (opt-in here), retry/backoff (``etl/extract.py:24-153``).
-This module is that client re-expressed for executor-side fetching: a
-picklable callable matching ``paged.PageFetcher``, so ``fetch_paged``
-fans it out over the key DataFrame (one parallel HTTP stream per key —
-at 1000 executors, 1000-way extraction vs the reference's single loop).
+This module is that client as a callable matching ``paged.PageFetcher``,
+so ``fetch_paged`` runs it from the driver's thread pool over the key
+DataFrame (one HTTP stream per key, ``num_partitions`` keys at once,
+where the reference loops over keys one at a time).
 
 The WHO GHO OData API is public (https://ghoapi.azureedge.net/api); each
 indicator code is an entity set whose rows are observations. A fetch key

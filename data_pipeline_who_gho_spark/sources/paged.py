@@ -1,39 +1,42 @@
-"""S1-S7: the paged record source, Spark-first.
+"""S1-S7: the paged record source.
 
 Reference shape (``etl/extract.py``): a driver-side loop — per
 (indicator, country) key pair, GET pages of 100 with retry/backoff,
 checkpoint the next-page link after each page, resume from checkpoint.
 
-Spark-first re-expression:
+Re-expression:
 
 - The fetch *plan* is data: a DataFrame of fetch keys (the reference's
   ``indicator × country`` nested loop becomes ``crossJoin`` — S6).
-- Executors fetch in parallel: ``mapInPandas`` over the key DataFrame,
-  each task pulling all pages for its keys (S1/S3) with tenacity-style
-  retry/backoff (S2) — at 1000 executors this is 1000-way parallel
-  extraction vs the reference's single process.
+- The driver fetches it, as the reference does: the key column is
+  collected, a thread pool pulls all pages of each key (S1/S3) with
+  tenacity-style retry/backoff (S2), and the records become one
+  ``createDataFrame`` (SURVEY S1's Spark form). The extract is held on
+  the driver; threads suit the I/O-bound page loop.
 - Predicate pushdown (S5) is the fetch-plan construction itself: each
   key row carries its filter; the "source" only ever produces matching
   records (same mechanism as the reference's ``$filter=`` URL).
-- Checkpoint/resume (S4): per key-batch, not per page — Spark retries
-  tasks wholesale, so page-grain checkpoints can't be trusted from
-  executors; the observable guarantee (no loss, no dupes after the
+- Checkpoint/resume (S4): per key-batch, not per page — a batch's
+  records reach the sink as one DataFrame, so the batch is the unit that
+  lands; the observable guarantee (no loss, no dupes after the
   idempotent MERGE) matches the reference's. Completed batches are
   recorded in the etl_state repository and skipped on resume.
 - Row limit (S7): ``df.limit(n)`` on the result.
 
-The fetcher is injected (a picklable callable), so tests and local runs
-read fixtures with zero network — the oracle path never touches HTTP.
+The fetcher is injected (a callable), so tests and local runs read
+fixtures with zero network — the oracle path never touches HTTP.
 """
 
 from __future__ import annotations
 
 import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .state import EtlStateRepository
 
@@ -80,39 +83,22 @@ def fetch_paged(
     limit: int | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Distributed paged extraction: one executor task per key partition.
+    """Paged extraction on the driver: ``num_partitions`` threads
+    (default: the cluster's defaultParallelism, capped at the key count)
+    fetch whole keys at once, and the records come back in key order as
+    one frame of ``schema``.
 
     ``keys`` is the fetch plan (build it with crossJoin for S6 fan-out).
-    Records stream out of ``mapInPandas`` in page-sized pandas batches —
-    no driver materialization at any scale.
-
-    The plan is re-partitioned to ``num_partitions`` (default: the
-    cluster's defaultParallelism) before the fetch: a crossJoin-built
-    plan otherwise carries left x right partitions (32 x 32 = 1024 in
-    local tests — found by the scaling probe as ~20 s of empty
-    Python-worker spin-up for a 10-key fetch), and the round-robin
-    shuffle of the tiny key rows also evens out key skew so every
-    executor fetches, not just the partitions the crossJoin landed
-    keys in.
+    The call is eager: the HTTP, and an error that a key's retries do not
+    absorb, happen here, not at the first action on the result.
     """
-    plan = keys.select(key_col)
-    target = num_partitions or spark.sparkContext.defaultParallelism
-    if plan.rdd.getNumPartitions() != target:
-        plan = plan.repartition(target)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            for key in batch[key_col]:
-                rows = []
-                for rec in fetch_all_pages(fetcher, key, page_size):
-                    rows.append(rec)
-                    if len(rows) >= page_size:
-                        yield pd.DataFrame(rows)
-                        rows = []
-                if rows:
-                    yield pd.DataFrame(rows)
-
-    out = plan.mapInPandas(run, schema)
+    plan = [r[0] for r in keys.select(key_col).collect()]
+    threads = max(1, min(num_partitions or spark.sparkContext.defaultParallelism, len(plan)))
+    with ThreadPoolExecutor(threads) as pool:
+        per_key = pool.map(lambda k: list(fetch_all_pages(fetcher, k, page_size)), plan)
+        records = [rec for recs in per_key for rec in recs]
+    struct = StructType.fromDDL(schema)
+    out = spark.createDataFrame(pd.DataFrame(records, columns=struct.fieldNames()), struct)
     return out.limit(limit) if limit is not None else out
 
 
@@ -144,22 +130,7 @@ def fetch_with_checkpoint(
     processed = 0
     for bi in range(start_batch, len(batches)):
         kdf = spark.createDataFrame([(k,) for k in batches[bi]], "key STRING")
-        # r14 (guide §4.5/§2.6): cap fetch parallelism at the batch's key
-        # count — the default spread to defaultParallelism spawned a
-        # Python worker per partition, most of them EMPTY for small
-        # batches (the fetch is one task per key at most). At scale
-        # (keys >= cores) this is the same defaultParallelism as before.
-        df = fetch_paged(
-            spark,
-            kdf,
-            fetcher,
-            schema,
-            page_size=page_size,
-            num_partitions=max(
-                1,
-                min(len(batches[bi]), spark.sparkContext.defaultParallelism),
-            ),
-        )
+        df = fetch_paged(spark, kdf, fetcher, schema, page_size=page_size)
         if sink is not None:
             sink(df, bi)
         else:

@@ -5,8 +5,8 @@ The idiomatic-Spark form of the reference's OData extract loop
 reader is the idiomatic (optional) form" of the reference's source-side
 `$filter` pushdown (`etl/extract.py:137-141`) — PySpark 4's Python
 DataSource API makes that form available without JVM code, so the engine
-ships it alongside the fetch-plan/`mapInPandas` path (sources/paged.py;
-that path remains the oracle-gated one).
+ships it alongside the driver-side fetch of sources/paged.py, which the
+pipeline and the benchmark use.
 
 Semantics carried over from the reference:
 - one input partition per fetch key (the per-(indicator,country) unit,

@@ -1,6 +1,7 @@
 """Fixture fetchers for tests and local runs (SURVEY §7: the oracle/test
-path never touches the network). Importable by executors — fetchers used
-in ``mapInPandas`` must live in an importable module, not a test file."""
+path never touches the network). They live in the package, not a test
+file: the gated ``queries()`` entries fetch through them, and the paged
+DataSource imports its default fetcher by name on the executors."""
 
 from __future__ import annotations
 

@@ -96,3 +96,20 @@ def test_reattach_replaces_views_of_absent_tables(spark, tmp_path):
         spark.createDataFrame([], REJECTED_RECORD)
     )
     assert eng.table("fact_observation").count() == 1
+
+
+def test_attach_restores_a_table_parked_by_a_cut_swap(spark, tmp_path, crash_mid_swap):
+    """An upsert cut between its two renames leaves only the parked
+    ``.dim_country.old-*`` dir; attaching must show its rows, not an empty
+    view."""
+    from data_pipeline_who_gho_spark.operators.load import upsert
+
+    wh = str(tmp_path)
+    rows = [("JPN", "Japan"), ("FRA", "France"), ("USA", "United States")]
+    upsert(spark, spark.createDataFrame(rows, DIM_COUNTRY), wh, "dim_country", ["country_code"])
+    with crash_mid_swap():
+        upsert(spark, spark.createDataFrame([("DEU", "Germany")], DIM_COUNTRY), wh,
+               "dim_country", ["country_code"])
+
+    Engine(spark).attach_warehouse(wh)
+    assert spark.sql("SELECT count(*) FROM dim_country").first()[0] == 3

@@ -15,6 +15,22 @@ def test_absent_table_is_reported(spark, tmp_path):
     assert migrate_table(spark, str(tmp_path), "fact", REQUIRED) == "absent"
 
 
+def test_table_parked_by_a_cut_swap_is_restored_not_absent(spark, tmp_path, crash_mid_swap):
+    """A swap cut between its renames leaves the table only as its parked
+    ``.fact.old-*`` dir: the migration restores it and inspects it."""
+    from data_pipeline_who_gho_spark.operators.load import upsert
+
+    schema = "observation_id STRING, indicator_code STRING, numeric_value DOUBLE"
+    wh = str(tmp_path)
+    upsert(spark, spark.createDataFrame([("1", "A", 1.0)], schema), wh, "fact", ["observation_id"])
+    with crash_mid_swap():
+        upsert(spark, spark.createDataFrame([("2", "B", 2.0)], schema), wh, "fact",
+               ["observation_id"])
+
+    assert migrate_table(spark, wh, "fact", REQUIRED) == "ok"
+    assert spark.read.parquet(str(tmp_path / "fact")).count() == 1
+
+
 def test_current_schema_is_noop(spark, tmp_path):
     df = spark.createDataFrame(
         [("1", "A", 1.0)], "observation_id STRING, indicator_code STRING, numeric_value DOUBLE"

@@ -95,8 +95,8 @@ def test_key_without_country_omits_filter():
 
 
 def test_spark_fan_out_with_odata_fetcher(spark):
-    """fetch_paged drives the OData client on executors: the indicator ×
-    country crossJoin plan becomes parallel HTTP streams (S6)."""
+    """fetch_paged drives the OData client from the driver's threads: the
+    indicator × country crossJoin plan becomes parallel HTTP streams (S6)."""
     data = {
         "IND_A": _obs("IND_A", "USA", 12) + _obs("IND_A", "FRA", 3),
         "IND_B": _obs("IND_B", "USA", 5),
@@ -118,6 +118,19 @@ def test_spark_fan_out_with_odata_fetcher(spark):
     rows = out.collect()
     assert len(rows) == 20  # 12 + 3 + 5 + 0 (IND_B|FRA absent -> empty)
     assert {r["IndicatorCode"] for r in rows} == {"IND_A", "IND_B"}
+
+
+def test_fetch_where_every_key_is_absent_keeps_declared_schema(spark):
+    """Every key answered 404: an empty frame of exactly the declared
+    schema, not an error or an inferred one."""
+    from pyspark.sql.types import StructType
+
+    ddl = "Id STRING, IndicatorCode STRING, TimeDim INT, NumericValue DOUBLE"
+    f = ODataPageFetcher(base_url="http://x/api", transport=FakeODataTransport({}))
+    keys = spark.createDataFrame([("GONE|USA",), ("GONE|FRA",)], "key STRING")
+    out = fetch_paged(spark, keys, f, ddl, page_size=10)
+    assert out.schema == StructType.fromDDL(ddl)
+    assert out.count() == 0
 
 
 class _ResetOnce:

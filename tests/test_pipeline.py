@@ -213,3 +213,22 @@ def test_pipeline_mixed_null_ids_rerun_idempotent(spark, tmp_path):
     fact = spark.read.parquet(str(tmp_path / "wh" / "fact_observation"))
     ids = sorted(r["observation_id"] for r in fact.collect())
     assert ids == ["1", "ck:WHOSIS_000001:FRA:2019"]
+
+
+def test_pipeline_mixed_batch_keeps_every_null_id_row(spark, tmp_path):
+    """NULL-Id rows with distinct natural keys are distinct facts, also in
+    a batch where other rows carry an Id: none may vanish in the dedup."""
+    base = {"IndicatorCode": "WHOSIS_000001", "SpatialDimType": "COUNTRY",
+            "TimeDimType": "YEAR", "NumericValue": "1.0", "Value": "1.0"}
+    rows = [{**base, "Id": "1", "SpatialDim": "USA", "TimeDim": "2019"}] + [
+        {**base, "Id": None, "SpatialDim": c, "TimeDim": y}
+        for c, y in (("FRA", "2019"), ("FRA", "2020"), ("JPN", "2019"))
+    ]
+    src, wh = tmp_path / "obs", str(tmp_path / "wh")
+    spark.createDataFrame(rows, RAW_OBSERVATION).write.parquet(str(src))
+    run_pipeline(spark, PipelineConfig(warehouse_dir=wh, source_observations=str(src)))
+    assert _fact_ids(spark, wh) == [
+        "1", "ck:WHOSIS_000001:FRA:2019", "ck:WHOSIS_000001:FRA:2020",
+        "ck:WHOSIS_000001:JPN:2019",
+    ]
+    assert not os.path.exists(os.path.join(wh, "rejected_record"))

@@ -60,6 +60,44 @@ def test_fetch_paged_limit(spark):
     assert df.count() == 3
 
 
+def test_fetch_paged_plan_has_no_python_operator(spark):
+    """The fetch runs on the driver: the returned frame's executed plan
+    holds the records, with no Python worker operator behind it."""
+    keys = spark.createDataFrame([("a",), ("b",)], "key STRING")
+    df = fetch_paged(spark, keys, _pages_fetcher, SCHEMA, page_size=2)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan and "Python" not in plan
+    assert df.count() == 10
+
+
+def test_fetch_paged_raises_exhausted_retries_from_the_call(spark):
+    """A key whose retries run out fails the fetch_paged call itself with
+    the fetcher's own exception, not a later action."""
+
+    def always_fail(key, page, page_size):
+        raise ConnectionError("down")
+
+    keys = spark.createDataFrame([("a",), ("b",)], "key STRING")
+    with pytest.raises(ConnectionError, match="down"):
+        fetch_paged(spark, keys, always_fail, SCHEMA, page_size=2)
+
+
+def test_fetch_paged_keeps_key_order_across_threads(spark):
+    """More fetch threads than cores, switching often: every record
+    arrives once, in key order, then page order within a key."""
+    import sys
+
+    keys = [f"k{i:03d}" for i in range(64)]
+    kdf = spark.createDataFrame([(k,) for k in keys], "key STRING")
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        df = fetch_paged(spark, kdf, _pages_fetcher, SCHEMA, page_size=2, num_partitions=16)
+    finally:
+        sys.setswitchinterval(interval)
+    assert [(r["key"], r["idx"]) for r in df.collect()] == [(k, i) for k in keys for i in range(5)]
+
+
 def test_checkpoint_resume(spark, tmp_path):
     state = EtlStateRepository(spark, str(tmp_path))
     seen: list[int] = []

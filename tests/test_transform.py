@@ -56,6 +56,19 @@ def test_clean_observations_id_fallback(spark, raw_observations):
     assert out.count() == 4
 
 
+def test_clean_observations_mixed_ids_keep_null_id_rows(spark, raw_observations):
+    # Id "1" rows dedup on Id; each NULL-Id row is keyed by its natural key
+    # (ck:<indicator>:<spatial>:<year>), so distinct ones all survive
+    recs = [r for r in raw_observations if r["Id"] == "1"] + [
+        {**r, "Id": None} for r in raw_observations if r["Id"] in ("2", "3", "4")
+    ]
+    out = clean_observations(records_to_df(spark, recs, RAW_OBSERVATION))
+    assert [r["Id"] for r in out.orderBy("Id").collect()] == [
+        "1", "ck:WHOSIS_000001:FRA:2019", "ck:WHOSIS_000001:GBR:2020",
+        "ck:WHOSIS_000002:JPN:2019",
+    ]
+
+
 def test_clean_observations_empty(spark):
     out = clean_observations(records_to_df(spark, [], RAW_OBSERVATION))
     assert out.count() == 0
