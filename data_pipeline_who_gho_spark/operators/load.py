@@ -42,7 +42,7 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -167,7 +167,8 @@ def upsert(
     table: str,
     keys: Sequence[str],
     partition_by: Sequence[str] | None = None,
-) -> None:
+    observe: Callable[[DataFrame], tuple[DataFrame, Callable]] | None = None,
+) -> Callable | None:
     """L2: idempotent keyed upsert into a parquet warehouse table.
 
     Protocol: (1) one aggregate gives the batch's distinct keys and its
@@ -177,6 +178,11 @@ def upsert(
     ``partition_by`` when given: one swap unit per table. Re-running the
     same batch yields the same rows (idempotency — the reference's core
     guarantee, etl/load.py:45-48).
+
+    ``observe(merged)`` returns the frame to write and a ``finish``
+    callable, as ``quality.observed_dq`` does, so metrics of the whole
+    new table come from the write itself. The upsert returns that
+    ``finish``, to call after the commit, or None when nothing was written.
     """
     n_keys, max_rows = (
         updates.groupBy(*[F.col(k) for k in keys])
@@ -189,11 +195,15 @@ def upsert(
 
     target = read_table(spark, warehouse_dir, table)
     if target is not None and not n_keys:
-        return  # empty batch: nothing to merge
-    writer = merge_upsert(target, updates, keys).write.mode("overwrite")
+        return None  # empty batch: nothing to merge
+    merged, finish = merge_upsert(target, updates, keys), None
+    if observe is not None:
+        merged, finish = observe(merged)
+    writer = merged.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     atomic_overwrite(_table_path(warehouse_dir, table), writer.parquet)
+    return finish
 
 
 def append_rejects(rejected: DataFrame, warehouse_dir: str, table: str = "rejected_record") -> None:

@@ -6,9 +6,11 @@ the declared key columns. Raising fails the run — same observable contract
 as the reference's task failure + alert email.
 
 One path: both checks are one aggregation (``_dq_metrics``), run either
-eagerly (``run_dq_checks``) or as an ``Observation`` on a write
-(``observed_dq``); Spark plans it as partial+final count with no data
-movement beyond one scalar pair per partition.
+as an ``Observation`` on a write (``observed_dq``) or eagerly
+(``run_dq_checks``); Spark plans it as partial+final count with no data
+movement beyond one scalar pair per partition. The pipeline observes the
+fact upsert's write, which is the whole new table, and scans the table
+with ``run_dq_checks`` only when a load writes nothing.
 """
 
 from __future__ import annotations
@@ -62,7 +64,8 @@ def observed_dq(df: DataFrame, keys: Sequence[str], name: str = "fact_observatio
     """Zero-extra-pass DQ: attach both Q1/Q2 metrics as a Spark
     ``Observation`` so they are collected as a by-product of whatever
     action consumes ``df`` (typically the load write) — at 100 TB this
-    saves the two post-load scans the reference's DQ task performs.
+    saves the post-load scan the reference's DQ task performs (the
+    pipeline passes it to ``upsert`` as ``observe``).
 
     Returns ``(observed_df, finish)``: run an action on ``observed_df``,
     then call ``finish()`` to validate (raising :class:`DataQualityError`

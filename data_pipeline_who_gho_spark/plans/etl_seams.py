@@ -80,7 +80,7 @@ def _memo(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
 def etl_retry_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 under the correctness gate: the paged fetch against a fetcher
     whose FIRST attempt at every (key, page) raises ``ConnectionError``
-    (``sources/testing.flaky_fetcher``). ``fetch_all_pages`` retries
+    (a fresh ``sources/testing.flaky_fetcher()`` per call). ``fetch_all_pages`` retries
     each page with exponential backoff inside its fetch (tenacity parity,
     reference ``etl/extract.py:30``), so the observable records must be
     byte-identical to an un-flaky fetch — retries are invisible to the
@@ -90,7 +90,7 @@ def etl_retry_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(f"retry{i}",) for i in range(4)], "key STRING"
     )
     return fetch_paged(
-        spark, keys, flaky_fetcher, "key STRING, idx INT", page_size=2
+        spark, keys, flaky_fetcher(), "key STRING, idx INT", page_size=2
     )
 
 

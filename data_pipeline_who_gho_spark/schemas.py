@@ -31,6 +31,13 @@ RAW_OBSERVATION = T.StructType(
     ]
 )
 
+# The observation source as the pipeline reads it: the API fields plus the
+# load stamp the watermark filters on. A source without the stamp reads it
+# as NULL, and a NULL stamp counts as new data.
+OBSERVATION_SOURCE = T.StructType(
+    RAW_OBSERVATION.fields + [T.StructField("ingested_at", T.TimestampType(), True)]
+)
+
 RAW_INDICATOR = T.StructType(
     [
         T.StructField("IndicatorCode", T.StringType(), True),

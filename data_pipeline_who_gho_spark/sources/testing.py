@@ -17,15 +17,19 @@ def pages_fetcher(key: str, page: int, page_size: int) -> list[dict]:
     ]
 
 
-_fail_once: dict = {}
+def flaky_fetcher():
+    """A fresh retry-path fixture: the returned fetcher fails the first
+    attempt at every (key, page), then serves ``pages_fetcher``'s page.
+    Each call starts with no failure spent, so every fetch retries."""
+    failed: set = set()
 
+    def fetch(key: str, page: int, page_size: int) -> list[dict]:
+        if (key, page) not in failed:
+            failed.add((key, page))
+            raise ConnectionError("transient")
+        return pages_fetcher(key, page, page_size)
 
-def flaky_fetcher(key: str, page: int, page_size: int) -> list[dict]:
-    """Fails the first attempt at every (key, page) — retry-path fixture."""
-    if (key, page) not in _fail_once:
-        _fail_once[(key, page)] = True
-        raise ConnectionError("transient")
-    return pages_fetcher(key, page, page_size)
+    return fetch
 
 
 # ---------------------------------------------------------------------------

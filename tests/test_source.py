@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import pytest
 
+from data_pipeline_who_gho_spark.plans.etl_seams import etl_retry_fetch
+from data_pipeline_who_gho_spark.sources import paged
 from data_pipeline_who_gho_spark.sources.paged import (
     fetch_all_pages,
     fetch_paged,
@@ -13,7 +15,6 @@ from data_pipeline_who_gho_spark.sources.paged import (
 )
 from data_pipeline_who_gho_spark.sources.state import EtlStateRepository
 from data_pipeline_who_gho_spark.sources.testing import (
-    _fail_once,
     flaky_fetcher as _flaky_fetcher,
     pages_fetcher as _pages_fetcher,
 )
@@ -34,9 +35,32 @@ def test_pagination_exact_multiple():
 
 
 def test_retry_transient():
-    _fail_once.clear()
-    out = list(fetch_all_pages(_flaky_fetcher, "k2", page_size=2, backoff_s=0.001))
+    out = list(fetch_all_pages(_flaky_fetcher(), "k2", page_size=2, backoff_s=0.001))
     assert len(out) == 5
+
+
+def test_every_retry_fetch_sees_its_injected_failures(spark, monkeypatch):
+    """Two ``etl_retry_fetch`` calls in one process: each must take the
+    retry path at every (key, page), 4 keys x 3 pages. A fail-once memory
+    shared by the process leaves the second call with no failure."""
+    failures = []
+    real = paged.fetch_all_pages
+
+    def counting(fetcher, key, page_size):
+        def fetch(k, page, size):
+            try:
+                return fetcher(k, page, size)
+            except ConnectionError:
+                failures.append((k, page))
+                raise
+
+        return real(fetch, key, page_size, backoff_s=0.0)
+
+    monkeypatch.setattr(paged, "fetch_all_pages", counting)
+    for _ in range(2):
+        failures.clear()
+        assert etl_retry_fetch(spark, "").count() == 20
+        assert len(failures) == 12
 
 
 def test_retry_exhausted():
