@@ -5,11 +5,9 @@ warehouse; a BI tool attaches via Thrift/Spark Connect unchanged).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from .operators.load import restore_parked
+from .operators.load import read_table
 from .schemas import WAREHOUSE_SCHEMAS
 from .sources.catalog import register_views
 
@@ -19,10 +17,9 @@ class Engine:
 
     ``attach_warehouse`` registers the pipeline-produced tables
     (dim_indicator, dim_country, fact_observation, rejected_record) on
-    every call, with their declared schemas: an attach runs no Spark job,
-    a table parked by a cut swap is restored first (the restore rule,
-    ``operators/load.restore_parked``), and a table absent on disk is an
-    empty view of its schema.
+    every call through ``operators/load.read_table``, with their declared
+    schemas: an attach runs no Spark job, and a table absent on disk is
+    an empty view of its schema.
     ``attach_fixtures`` exposes the driver's TPC-H-ish tables. Both are
     temp views — every query planned by Catalyst against parquet scans.
     """
@@ -38,11 +35,8 @@ class Engine:
 
     def attach_warehouse(self, warehouse_dir: str) -> "Engine":
         for t, schema in WAREHOUSE_SCHEMAS.items():
-            path = os.path.join(warehouse_dir, t)
-            restore_parked(path)
-            if os.path.exists(path):
-                df = self.spark.read.schema(schema).parquet(path)
-            else:
+            df = read_table(self.spark, warehouse_dir, t)
+            if df is None:
                 df = self.spark.createDataFrame([], schema)
             df.createOrReplaceTempView(t)
         return self

@@ -9,26 +9,23 @@ Spark-first design: the MERGE is a **broadcast-able left-anti join +
 unionByName** over parquet-at-rest. Parquet has no transactions, so every
 write (an upsert, the state table, a migration) commits one unit per
 table through ``atomic_overwrite``: the whole new table is written to a
-temp dir, then swapped in by two directory renames. What a crash leaves:
+``<table>.tmp-*`` dir beside it, then swapped in by one system call, and
+the temp name, which then holds the old table, is deleted. A reader
+finds either the old table or the new one, never no table. What a crash
+leaves:
 
-- during the temp write: the table untouched, plus a ``<table>.tmp-*``
-  dir (removed on the way out unless the process dies);
-- between the two renames: no ``<table>`` dir, and its old data parked
-  in ``.<table>.old-*`` beside it, which Spark does not read. A read of
-  the bare path fails loudly (``PATH_NOT_FOUND``);
-- after the second rename: the new table, plus the parked dir until its
-  delete finishes.
+- during the temp write: the old table, plus the temp dir (removed on
+  the way out unless the process dies);
+- after the swap: the new table, plus the temp dir holding the old one
+  until its delete finishes.
 
-Restore rule: a swap never removes a table on purpose, so a parked dir
-without its table is the old state of a cut swap, and a parked dir
-beside its table is a leftover. ``restore_parked`` renames the first
-back and deletes the second; ``read_table``, the state repository's
-read, ``Engine.attach_warehouse`` and ``migrate_table`` call it first,
-so the next load, state read, attach or migration sees the old state
-again, and a table never has two parked dirs. On a Delta/Iceberg-backed
-catalog the same function maps 1:1 onto ``MERGE INTO`` — the call-site
-contract is identical, so swapping the table format is a one-line change
-here.
+Spark never lists a temp dir: it sits beside the table, not inside it.
+The swap is Linux ``renameat2(..., RENAME_EXCHANGE)`` (tested on ext4),
+or one ``os.rename`` when the table is new. Where the exchange is not
+supported the commit raises, and the old table stays as it was. On a
+Delta/Iceberg-backed catalog the same function maps 1:1 onto
+``MERGE INTO`` — the call-site contract is identical, so swapping the
+table format is a one-line change here.
 
 Scale notes: the anti-join shuffles on the upsert key unless the update
 batch is small enough to broadcast — the common case for dimension upserts
@@ -39,6 +36,8 @@ callers dedup first (T6/T8), which the pipeline driver does.
 
 from __future__ import annotations
 
+import ctypes
+import functools
 import os
 import shutil
 import uuid
@@ -46,6 +45,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..schemas import WAREHOUSE_SCHEMAS
 
 
 class UpsertKeyError(ValueError):
@@ -57,59 +58,58 @@ def _table_path(warehouse_dir: str, table: str) -> str:
     return os.path.join(warehouse_dir, table)
 
 
-def restore_parked(path: str) -> None:
-    """Apply the restore rule to the table at ``path``: with ``path``
-    absent, its parked ``.<name>.old-*`` dir is the old state of a swap
-    cut between its renames and is renamed back; with ``path`` present,
-    a parked dir is what a finished swap failed to delete, and goes.
+_AT_FDCWD, _RENAME_EXCHANGE = -100, 2  # <fcntl.h>, <linux/fs.h>
 
-    A reader that restores while a writer sits between its two renames
-    takes the writer's parked dir back: the writer's install rename then
-    fails loudly (the table dir exists again) and the old state stays."""
-    parent, name = os.path.split(path)
-    if not os.path.isdir(parent):
-        return
-    for entry in os.listdir(parent):
-        if entry.startswith(f".{name}.old-"):
-            if os.path.exists(path):
-                shutil.rmtree(os.path.join(parent, entry), ignore_errors=True)
-            else:
-                os.rename(os.path.join(parent, entry), path)
+
+@functools.cache
+def _renameat2():
+    """libc's ``renameat2``, looked up at first use: importing this module
+    works without it, and a commit over an existing table then raises."""
+    fn = ctypes.CDLL(None, use_errno=True).renameat2
+    fn.argtypes = (ctypes.c_int, ctypes.c_char_p, ctypes.c_int, ctypes.c_char_p, ctypes.c_uint)
+    fn.restype = ctypes.c_int
+    return fn
+
+
+def _install(tmp: str, path: str) -> None:
+    """Put the table written at ``tmp`` in at ``path`` in one step: a
+    rename for a new table, else an exchange of the two dirs, after which
+    ``tmp`` holds the old table."""
+    if not os.path.exists(path):
+        os.rename(tmp, path)
+    elif _renameat2()(_AT_FDCWD, os.fsencode(tmp), _AT_FDCWD, os.fsencode(path), _RENAME_EXCHANGE):
+        err = ctypes.get_errno()
+        raise OSError(err, os.strerror(err), tmp, None, path)
 
 
 def atomic_overwrite(path: str, write_fn) -> None:
     """The warehouse's one commit routine: ``write_fn(tmp)`` writes the
-    whole new table to a temp dir, the live dir is parked under a
-    ``.``-name that Spark's listing skips, the temp dir is renamed in,
-    and the parked dir is deleted. Any failure removes the temp dir; the
-    parked dir is never deleted before the new table is in (module
-    docstring: what a crash leaves, and the restore rule).
+    whole new table to a temp dir, ``_install`` swaps it in, and the temp
+    dir goes, holding the old table after a commit or the unused new one
+    after a failure (module docstring: what a crash leaves).
 
-    The rename pair is not one atomic operation. This matches the
-    engine's single-writer posture (the reference runs with
-    ``max_active_runs=1``, dags/who_gho_etl_dag.py:35); concurrent
-    writers need external coordination or a transactional table format
-    (Delta/Iceberg), onto which this call-site maps 1:1.
+    Two writers of one table are not coordinated: the engine is single
+    writer, as the reference runs with ``max_active_runs=1``
+    (dags/who_gho_etl_dag.py:35).
     """
-    parent, name = os.path.split(path)
-    suffix = uuid.uuid4().hex[:8]
-    tmp, old = f"{path}.tmp-{suffix}", os.path.join(parent, f".{name}.old-{suffix}")
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     try:
         write_fn(tmp)
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(tmp, path)
+        _install(tmp, path)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def read_table(spark: SparkSession, warehouse_dir: str, table: str) -> DataFrame | None:
+    """The table at rest, or None when it is absent. A warehouse table
+    (``schemas.WAREHOUSE_SCHEMAS``) is read with its declared schema, so
+    opening it reads no parquet footer."""
     path = _table_path(warehouse_dir, table)
-    restore_parked(path)
     if not os.path.exists(path):
         return None
-    return spark.read.parquet(path)
+    schema = WAREHOUSE_SCHEMAS.get(table)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def merge_upsert(target: DataFrame | None, updates: DataFrame, keys: Sequence[str]) -> DataFrame:

@@ -28,7 +28,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .load import _table_path, atomic_overwrite, restore_parked
+from .load import _table_path, atomic_overwrite
 
 
 def migrate_table(
@@ -45,7 +45,6 @@ def migrate_table(
     action taken: ``"absent"``, ``"ok"``, ``"rebuilt"`` or ``"dropped"``.
     """
     path = _table_path(warehouse_dir, table)
-    restore_parked(path)
     if not os.path.exists(path):
         return "absent"
 

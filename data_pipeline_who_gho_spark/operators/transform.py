@@ -22,6 +22,7 @@ else is a narrow map stage fused into one WholeStageCodegen span.
 from __future__ import annotations
 
 from collections.abc import Iterable, Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -69,25 +70,22 @@ def normalize_year(col: Column | str) -> Column:
 
 
 def dedup_keep_first(
-    df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | str] = ()
+    df: DataFrame, keys: Sequence[str], order_by: Sequence[Column | str]
 ) -> DataFrame:
     """T6/T8: deterministic keyed dedup.
 
     pandas ``drop_duplicates`` keeps the *first row in input order*
-    (etl/transform.py:45-48); Spark's ``dropDuplicates`` keeps an arbitrary
-    row. For reproducible results we use the row_number idiom: partition by
-    the key, order by an explicit tiebreaker, keep rank 1. Callers that do
-    not care about which duplicate survives should pass no ``order_by`` and
-    we fall back to ``dropDuplicates`` (cheaper: partial agg before shuffle).
+    (etl/transform.py:45-48); input order is unobservable across a
+    shuffle, so we use the row_number idiom: partition by the key, order
+    by an explicit tiebreaker, keep rank 1. A row with a NULL key column
+    is kept as it is: it has no key to be a duplicate of, and the
+    validation step rejects it with its reason instead.
     """
-    if not order_by:
-        return df.dropDuplicates(list(keys))
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
-        *[F.col(o) if isinstance(o, str) else o for o in order_by]
-    )
+    w = Window.partitionBy(*keys).orderBy(*order_by)
+    keyless = reduce(Column.__or__, [F.col(k).isNull() for k in keys])
     return (
         df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        .filter((F.col("__rn") == 1) | keyless)
         .drop("__rn")
     )
 
@@ -117,9 +115,10 @@ def clean_observations(df: DataFrame) -> DataFrame:
         ":", F.lit("ck"), "IndicatorCode", "SpatialDim", F.col("TimeDim").cast("string")
     )
     df = df.withColumn("Id", F.coalesce(F.col("Id").cast("string"), surrogate))
-    # pandas keeps first-in-input-order; input order is unobservable across
-    # a shuffle, so we pin a deterministic tiebreaker on the full key set.
-    return dedup_keep_first(df, ["Id"], order_by=OBSERVATION_KEY_COLUMNS)
+    # a deterministic tiebreaker on the full key set; then the row whose
+    # required types are set, so a duplicate that validates is the one kept
+    required = [F.col(c).asc_nulls_last() for c in ("SpatialDimType", "TimeDimType")]
+    return dedup_keep_first(df, ["Id"], order_by=OBSERVATION_KEY_COLUMNS + required)
 
 
 def clean_indicators(df: DataFrame) -> DataFrame:
@@ -131,7 +130,8 @@ def clean_indicators(df: DataFrame) -> DataFrame:
 
 
 def clean_countries(df: DataFrame) -> DataFrame:
-    """T8 for countries: dedup on Code (etl/transform.py:70-79)."""
+    """T8 for countries: dedup on Code (etl/transform.py:70-79), keeping a
+    row with a Title (it is required) over one without."""
     cols = ["Code", "Title"]
     df = ensure_columns(df, cols).select(*cols)
-    return dedup_keep_first(df, ["Code"], order_by=["Title"])
+    return dedup_keep_first(df, ["Code"], order_by=[F.col("Title").asc_nulls_last()])

@@ -27,7 +27,7 @@ from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.load import append_rejects, upsert
+from .operators.load import append_rejects, read_table, upsert
 from .operators.quality import observed_dq, run_dq_checks
 from .operators.transform import clean_countries, clean_indicators, clean_observations
 from .operators.validate import (
@@ -38,7 +38,6 @@ from .operators.validate import (
 )
 from .schemas import (
     COUNTRY_RENAMES,
-    FACT_OBSERVATION,
     INDICATOR_RENAMES,
     OBSERVATION_RENAMES,
     OBSERVATION_SOURCE,
@@ -50,6 +49,8 @@ from .sources.state import EtlStateRepository
 
 # the DQ gate's key columns (who_gho_etl_dag.py:200-206)
 DQ_KEYS = ["indicator_code", "spatial_dim", "time_dim"]
+# the state row that holds the watermark (the reference's process name)
+PROCESS_NAME = "who_gho_etl"
 
 
 @dataclass
@@ -62,7 +63,6 @@ class PipelineConfig:
     source_countries: str | None = None
     limit: int | None = None  # dev_run_limit parity
     full_reingest: bool = False  # implemented (the reference only declared it)
-    process_name: str = "who_gho_etl"
     source_format: str = "parquet"  # or "json" (the reference's interchange)
 
 
@@ -123,7 +123,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     """Full batch run; returns DQ metrics. Idempotent by construction
     (keyed upserts), matching the reference's re-run guarantee."""
     state = EtlStateRepository(spark, cfg.warehouse_dir)
-    wm = None if cfg.full_reingest else state.get_watermark(cfg.process_name)
+    wm = None if cfg.full_reingest else state.get_watermark(PROCESS_NAME)
 
     dims = [
         (cfg.source_indicators, RAW_INDICATOR, clean_indicators, indicator_rules(),
@@ -154,7 +154,7 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
     if finish is not None:
         metrics = finish()
     else:
-        fact = spark.read.schema(FACT_OBSERVATION).parquet(f"{cfg.warehouse_dir}/fact_observation")
+        fact = read_table(spark, cfg.warehouse_dir, "fact_observation")
         metrics = run_dq_checks(fact, DQ_KEYS, "fact_observation")
 
     # watermark = max event-time actually processed, NOT wall-clock run
@@ -167,9 +167,9 @@ def run_pipeline(spark: SparkSession, cfg: PipelineConfig) -> dict:
         return metrics
     seen = seen.get
     if seen["max_stamp"] is not None:
-        state.set_last_successful_run_at(cfg.process_name, seen["max_stamp"])
+        state.set_last_successful_run_at(PROCESS_NAME, seen["max_stamp"])
     elif seen["rows"]:
-        state.set_last_successful_run_at(cfg.process_name)
+        state.set_last_successful_run_at(PROCESS_NAME)
     return metrics
 
 

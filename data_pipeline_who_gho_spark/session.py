@@ -33,7 +33,6 @@ DEFAULT_SHUFFLE_PARTITIONS = (
 
 def get_spark(
     app_name: str = "data-pipeline-who-gho-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -41,7 +40,7 @@ def get_spark(
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(f"local[{cpus}]")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -51,7 +50,7 @@ def get_spark(
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # tables are local dirs (loads commit by os.rename): list on the driver, not in a job
+        # tables are local dirs (loads commit by a directory swap): list on the driver, not in a job
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1))
         # parquet writes the same timestamps DuckDB reads (no int96 legacy)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

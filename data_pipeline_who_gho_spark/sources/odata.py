@@ -31,6 +31,7 @@ from urllib.error import HTTPError, URLError
 from urllib.parse import quote, urlencode
 
 WHO_GHO_BASE_URL = "https://ghoapi.azureedge.net/api"
+ORDERBY = "TimeDim asc"  # the reference's page order (etl/extract.py)
 KEY_SEP = "|"  # splits a fetch key into entity set and country
 
 # transport(url) -> (http_status, decoded_json_body)
@@ -104,12 +105,10 @@ class ODataPageFetcher:
         self,
         base_url: str = WHO_GHO_BASE_URL,
         transport: Transport | None = None,
-        orderby: str | None = "TimeDim asc",
         skip_request_errors: bool = False,
     ):
         self.base_url = base_url
         self.transport = transport or UrllibTransport()
-        self.orderby = orderby
         self.skip_request_errors = skip_request_errors
 
     def url_for(self, key: str, page: int, page_size: int) -> str:
@@ -120,7 +119,7 @@ class ODataPageFetcher:
             top=page_size,
             skip=page * page_size,
             filter_expr=spatial_filter(country) if country else None,
-            orderby=self.orderby,
+            orderby=ORDERBY,
         )
 
     def __call__(self, key: str, page: int, page_size: int) -> list[dict]:

@@ -78,7 +78,6 @@ def fetch_paged(
     keys: DataFrame,
     fetcher: PageFetcher,
     schema: str,
-    key_col: str = "key",
     page_size: int = 100,
     limit: int | None = None,
     num_partitions: int | None = None,
@@ -88,11 +87,12 @@ def fetch_paged(
     fetch whole keys at once, and the records come back in key order as
     one frame of ``schema``.
 
-    ``keys`` is the fetch plan (build it with crossJoin for S6 fan-out).
+    ``keys`` is the fetch plan, one fetch key per row in its ``key``
+    column (build it with crossJoin for S6 fan-out).
     The call is eager: the HTTP, and an error that a key's retries do not
     absorb, happen here, not at the first action on the result.
     """
-    plan = [r[0] for r in keys.select(key_col).collect()]
+    plan = [r[0] for r in keys.select("key").collect()]
     threads = max(1, min(num_partitions or spark.sparkContext.defaultParallelism, len(plan)))
     with ThreadPoolExecutor(threads) as pool:
         per_key = pool.map(lambda k: list(fetch_all_pages(fetcher, k, page_size)), plan)

@@ -20,7 +20,7 @@ from datetime import datetime, timezone
 
 from pyspark.sql import SparkSession
 
-from ..operators.load import atomic_overwrite, restore_parked
+from ..operators.load import atomic_overwrite
 
 
 class EtlStateRepository:
@@ -73,7 +73,6 @@ class EtlStateRepository:
     def _read_all(self) -> dict[str, dict]:
         import pyarrow.parquet as pq
 
-        restore_parked(self.path)  # undo a state write cut mid-swap (the restore rule)
         if not os.path.exists(self.path):
             return {}
         table = pq.read_table(self.path)

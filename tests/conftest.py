@@ -13,6 +13,7 @@ import os
 
 import pytest
 
+from data_pipeline_who_gho_spark.operators import load
 from data_pipeline_who_gho_spark.session import get_spark
 
 
@@ -24,20 +25,18 @@ def spark():
 
 @pytest.fixture()
 def crash_mid_swap(monkeypatch):
-    """``with crash_mid_swap(): <write>`` cuts the write's commit after the
-    live table is parked: the rename that installs the freshly written
-    temp dir raises, and the block asserts the write failed that way."""
-    real_rename = os.rename
+    """``with crash_mid_swap(): <write>`` cuts the write's commit between
+    its temp write and its install: ``load._install``, the one step that
+    swaps a table in, raises, and the block asserts the write failed that
+    way."""
 
-    def rename(src, dst):
-        if ".tmp-" in str(src):
-            raise OSError("simulated crash mid-swap")
-        real_rename(src, dst)
+    def install(tmp, path):
+        raise OSError("simulated crash mid-swap")
 
     @contextlib.contextmanager
     def cut():
         with monkeypatch.context() as m, pytest.raises(OSError, match="simulated crash"):
-            m.setattr(os, "rename", rename)
+            m.setattr(load, "_install", install)
             yield
 
     return cut

@@ -98,10 +98,9 @@ def test_reattach_replaces_views_of_absent_tables(spark, tmp_path):
     assert eng.table("fact_observation").count() == 1
 
 
-def test_attach_restores_a_table_parked_by_a_cut_swap(spark, tmp_path, crash_mid_swap):
-    """An upsert cut between its two renames leaves only the parked
-    ``.dim_country.old-*`` dir; attaching must show its rows, not an empty
-    view."""
+def test_attach_after_a_cut_install_shows_the_old_table(spark, tmp_path, crash_mid_swap):
+    """An upsert cut at its install step leaves the old ``dim_country`` in
+    place; attaching shows its rows, not an empty view."""
     from data_pipeline_who_gho_spark.operators.load import upsert
 
     wh = str(tmp_path)

@@ -15,9 +15,9 @@ def test_absent_table_is_reported(spark, tmp_path):
     assert migrate_table(spark, str(tmp_path), "fact", REQUIRED) == "absent"
 
 
-def test_table_parked_by_a_cut_swap_is_restored_not_absent(spark, tmp_path, crash_mid_swap):
-    """A swap cut between its renames leaves the table only as its parked
-    ``.fact.old-*`` dir: the migration restores it and inspects it."""
+def test_cut_install_leaves_the_table_to_migrate(spark, tmp_path, crash_mid_swap):
+    """An upsert cut at its install step leaves the old table in place:
+    the migration inspects it, and does not report it absent."""
     from data_pipeline_who_gho_spark.operators.load import upsert
 
     schema = "observation_id STRING, indicator_code STRING, numeric_value DOUBLE"

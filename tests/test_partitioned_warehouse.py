@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
-from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -79,12 +77,11 @@ def test_upsert_flat_table_to_partitioned(spark, tmp_path):
     assert rows == {("1", 2018, 1.0), ("2", 2019, 20.0), ("3", 2020, 3.0)}
 
 
-def test_crash_mid_table_swap_fails_loudly_then_restores(spark, tmp_path, crash_mid_swap):
-    """A crash after the live table is parked but before the new one is
-    renamed in leaves no table to read: a read fails with PATH_NOT_FOUND
-    and never lists the parked dir, so ``time_dim`` cannot turn STRING.
-    The next ``read_table`` renames the parked dir back: the old rows,
-    with ``time_dim`` INT."""
+def test_cut_install_keeps_the_old_partitioned_table(spark, tmp_path, crash_mid_swap):
+    """A crash at the install step of a partitioned upsert leaves the old
+    table in place: a plain read lists only its year dirs, so the rows are
+    the old ones and ``time_dim`` stays INT (a listed temp dir would
+    turn it STRING)."""
     wh = str(tmp_path)
     b1 = spark.createDataFrame(
         [("1", 2018, 1.0), ("2", 2019, 2.0)], "id STRING, time_dim INT, v DOUBLE"
@@ -94,10 +91,7 @@ def test_crash_mid_table_swap_fails_loudly_then_restores(spark, tmp_path, crash_
     with crash_mid_swap():
         upsert(spark, b2, wh, "fact", ["id"], partition_by=["time_dim"])
 
-    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
-        spark.read.parquet(os.path.join(wh, "fact")).collect()
-
-    fact = read_table(spark, wh, "fact")
+    fact = spark.read.parquet(os.path.join(wh, "fact"))
     assert isinstance(fact.schema["time_dim"].dataType, T.IntegerType)
     rows = {(r["id"], r["time_dim"], r["v"]) for r in fact.collect()}
     assert rows == {("1", 2018, 1.0), ("2", 2019, 2.0)}

@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql.readwriter import DataFrameReader
 
 from data_pipeline_who_gho_spark import pipeline as P
+from data_pipeline_who_gho_spark.operators import load
 from data_pipeline_who_gho_spark.operators.quality import DataQualityError
 from data_pipeline_who_gho_spark.pipeline import PipelineConfig, run_pipeline
 from data_pipeline_who_gho_spark.schemas import (
@@ -126,6 +127,28 @@ def test_pipeline_writes_rejects_once_per_run(spark, tmp_path, raw_observations,
         seen = files
 
 
+def test_country_dedup_keeps_the_valid_row_and_rejects_every_null_code(spark, tmp_path):
+    """Within a country code the row with a Title is kept, and rows without
+    a Code are not merged into one: each is rejected for its missing Code.
+    (Sorting a NULL Title first kept the invalid USA row, and one NULL-Code
+    group lost a row without a reject.)"""
+    src = tmp_path / "src"
+    cty = [("USA", "United States"), ("USA", None), (None, "A"), (None, "B")]
+    spark.createDataFrame(cty, RAW_COUNTRY).write.parquet(str(src / "cty"))
+    _stamped_source(spark, src / "obs", [("1", "USA", 5)])
+    wh = str(tmp_path / "wh")
+    run_pipeline(spark, PipelineConfig(warehouse_dir=wh, source_observations=str(src / "obs"),
+                                       source_countries=str(src / "cty")))
+
+    dim = spark.read.parquet(os.path.join(wh, "dim_country")).collect()
+    assert [tuple(r) for r in dim] == [("USA", "United States")]
+    rejects = spark.read.parquet(os.path.join(wh, "rejected_record"))
+    assert sorted(map(tuple, rejects.collect())) == [
+        ('{"Title":"A"}', "Code is required"),
+        ('{"Title":"B"}', "Code is required"),
+    ]
+
+
 def test_pipeline_limit(spark, tmp_path, sources):
     cfg = _cfg(tmp_path, sources)
     cfg.source_observations = str(sources / "obs")
@@ -161,7 +184,7 @@ def test_limited_run_keeps_watermark(spark, tmp_path):
     _stamped_source(spark, src, [("1", "USA", 5), ("2", "FRA", 3)])
     cfg = PipelineConfig(warehouse_dir=wh, source_observations=str(src), limit=1)
     run_pipeline(spark, cfg)
-    assert EtlStateRepository(spark, wh).get_watermark(cfg.process_name) is None
+    assert EtlStateRepository(spark, wh).get_watermark(P.PROCESS_NAME) is None
     cfg.limit = None
     run_pipeline(spark, cfg)
     assert _fact_ids(spark, wh) == ["1", "2"]
@@ -260,16 +283,15 @@ def test_null_stamped_row_is_loaded_once_a_watermark_exists(spark, tmp_path):
 
 
 def _installs(monkeypatch, before_install):
-    """Patch ``os.rename`` so that ``before_install(table)`` runs just
-    before a swap renames a freshly written table into place."""
-    real_rename = os.rename
+    """Patch ``load._install`` so that ``before_install(table)`` runs just
+    before a commit swaps a freshly written table into place."""
+    real_install = load._install
 
-    def rename(src, dst):
-        if ".tmp-" in str(src):
-            before_install(os.path.basename(str(dst)))
-        real_rename(src, dst)
+    def install(tmp, path):
+        before_install(os.path.basename(path))
+        real_install(tmp, path)
 
-    monkeypatch.setattr(os, "rename", rename)
+    monkeypatch.setattr(load, "_install", install)
 
 
 def test_dims_commit_before_the_fact(spark, tmp_path, monkeypatch, sources):

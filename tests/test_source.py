@@ -165,9 +165,9 @@ def test_state_roundtrip(spark, tmp_path):
 
 
 def test_watermark_survives_crashed_state_write(spark, tmp_path, crash_mid_swap):
-    """A state write cut between the two renames of its swap must leave the
-    previous watermark readable: a lost watermark makes the next run load
-    replays from below it."""
+    """A state write cut at its install step must leave the previous
+    watermark readable: a lost watermark makes the next run load replays
+    from below it."""
     from datetime import datetime, timezone
 
     state = EtlStateRepository(spark, str(tmp_path))

@@ -113,6 +113,17 @@ def test_dedup_keep_first_deterministic(spark):
     assert [(r["k"], r["v"]) for r in out] == [("k1", "a"), ("k2", "c")]
 
 
+def test_dedup_keeps_the_duplicate_that_validates(spark):
+    """A duplicate Id whose required types are set wins over one whose
+    SpatialDimType or TimeDimType is NULL."""
+    base = {"Id": "1", "IndicatorCode": "I", "SpatialDim": "USA", "SpatialDimType": "COUNTRY",
+            "TimeDim": "2019", "TimeDimType": "YEAR", "NumericValue": "1", "Value": "1"}
+    for field in ("SpatialDimType", "TimeDimType"):
+        recs = [{**base, field: None}, base]
+        out = clean_observations(spark.createDataFrame(recs, RAW_OBSERVATION)).collect()
+        assert [r[field] for r in out] == [base[field]]
+
+
 def test_ensure_columns_typed_null(spark):
     df = spark.createDataFrame([(1,)], "a INT")
     out = ensure_columns(df, ["a", "b"], dtype="double")
